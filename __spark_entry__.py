@@ -5145,7 +5145,7 @@ def _oracle_sql_gate() -> dict[str, str]:
             "  printf('%08x%08x', ph.hi, ph.lo) AS phash\n"
             "FROM m JOIN ph USING (media_id)"
         ),
-        # the mixed-fixture construction maps doc_id mod 7 to a format
+        # the mixed-fixture construction maps doc_id mod 8 to a format
         "doc_media_format": (
             "SELECT doc_id AS media_id,\n"
             "  CASE doc_id % 8 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png'\n"

@@ -252,19 +252,14 @@ def main(argv=None):
     elif args.app == "salsa":
         out, iters = apps.salsa(g), 1
     elif args.app == "ppr":
-        out, iters = apps.ppr(
-            g, seeds=args.seeds,
-            on_iteration=lambda r, f: track(r, {"frontier": f}),
-        )
+        out, iters = apps.ppr(g, seeds=args.seeds, on_superstep=track)
     elif args.app == "ktruss":
         out, iters = apps.ktruss(
             g, k=args.k, checkpoint_mgr=mgr, resume=args.resume,
-            on_round=lambda r, n: track(r, {"edges": n}),
+            on_superstep=track,
         )
     elif args.app == "truss_decomposition":
-        out, iters = apps.truss_decomposition(
-            g, on_round=lambda r, n: track(r, {"edges": n})
-        )
+        out, iters = apps.truss_decomposition(g, on_superstep=track)
     elif args.app == "community_lpa":
         out, iters = apps.community_lpa(g, rounds=args.max_iters), args.max_iters
     elif args.app == "kclique":

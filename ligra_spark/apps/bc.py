@@ -102,7 +102,7 @@ def bc_single_source(
             extra_frontier_cols=("dep",),
         )
         new = (
-            st2.df.join(msgs.hint("shuffle_hash"), "id", "left")
+            st2.df.join(msgs_join_side(msgs, None, graph.n), "id", "left")
             .select(
                 "id",
                 "level",

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import IterState, edge_map, msgs_join_side
+from ..engine import IterState, edge_map, msgs_join_side, sparse_tail_cut
 
 __all__ = ["components", "label_propagation"]
 
@@ -76,9 +76,7 @@ def components(
     # instead of rewriting the full n-row state — the full-state write
     # is the dominant fixed cost of late supersteps (BASELINE.md §3).
     # Durable-checkpoint runs stay dense (the manager owns the layout).
-    sparse_threshold = (
-        0 if checkpoint_mgr is not None else min(max(1024, graph.n // 20), graph.n // 4)
-    )
+    sparse_threshold = 0 if checkpoint_mgr is not None else sparse_tail_cut(graph.n)
     if it > 0:
         # resumed: the frontier is the checkpointed changed-set
         frontier = st.df.filter("changed").select("id", "label")
@@ -99,7 +97,7 @@ def components(
         if n_changed > sparse_threshold:
             new = (
                 st.df.select("id", "label")
-                .join(msgs.hint("shuffle_hash"), "id", "left")
+                .join(msgs_join_side(msgs, n_changed, graph.n), "id", "left")
                 .select(
                     "id",
                     F.least("label", F.coalesce("agg", "label")).alias("new_label"),

@@ -99,7 +99,7 @@ def _combined_bfs(
     return st.df.filter(F.col("level").isNotNull()), lvl, st
 
 
-def ecc_tk(graph, on_iteration=None) -> tuple[DataFrame, int]:
+def ecc_tk(graph, on_superstep=None) -> tuple[DataFrame, int]:
     """Returns ((id, ecc) exact for all n vertices, TK iterations —
     the max over components of the reference's per-component count)."""
     from .components import components as components_app
@@ -206,6 +206,6 @@ def ecc_tk(graph, on_iteration=None) -> tuple[DataFrame, int]:
         # BFS state is dead; free it now (TK runs up to n iterations,
         # so leaking one n-row cache per iteration is not an option)
         bfs_st.df.unpersist()
-        if on_iteration:
-            on_iteration(iters, {"active": n_active})
+        if on_superstep:
+            on_superstep(iters, {"active": n_active})
     return st.df.select("id", "ecc"), iters

@@ -610,7 +610,7 @@ def hyper_bc(
         recv = F.col("level") == r - 1
         if r == d and deepest_h == d + 1:
             recv = recv | (F.col("level") == d + 1)
-        newh = st2h.df.join(msgs.hint("shuffle_hash"), "id", "left").select(
+        newh = st2h.df.join(msgs_join_side(msgs, None, hg.nh), "id", "left").select(
             "id", "level",
             F.when(recv, F.col("dep") + F.coalesce("agg", F.lit(0.0)))
             .otherwise(F.col("dep"))
@@ -622,7 +622,7 @@ def hyper_bc(
             hg, hf, F.col("dep"), F.sum, extra_frontier_cols=("dep",)
         )
         plus1 = F.lit(1.0) if r - 2 >= 2 else F.lit(0.0)
-        newv = st2v.df.join(msgs2.hint("shuffle_hash"), "id", "left").select(
+        newv = st2v.df.join(msgs_join_side(msgs2, None, hg.nv), "id", "left").select(
             "id", "level", "sigma",
             F.when(
                 F.col("level") == r - 2,

@@ -90,7 +90,7 @@ def ktruss(
     graph,
     k: int,
     max_rounds: int = 100,
-    on_round=None,
+    on_superstep=None,
     checkpoint_mgr=None,
     checkpoint_every: int = 1,
     resume: bool = False,
@@ -100,9 +100,9 @@ def ktruss(
     rounds run).  Requires graph.symmetric; k >= 2 (k == 2 keeps every
     edge that closes no triangle too, i.e. the graph itself).
 
-    ``on_round(round, surviving_edges)`` is called after each peel
-    round's driver sync — the same observation hook shape as
-    ``pagerank``'s ``on_superstep``.
+    ``on_superstep(round, {"edges": surviving_edges})`` is called after
+    each peel round's driver sync — the hook convention every app
+    shares.
 
     ``checkpoint_mgr`` (a :class:`ligra_spark.checkpoint.
     CheckpointManager`) makes every ``checkpoint_every``-th round's
@@ -186,8 +186,8 @@ def ktruss(
         n_new = kept.count()
         e.unpersist()
         e = kept
-        if on_round is not None:
-            on_round(rounds, n_new)
+        if on_superstep is not None:
+            on_superstep(rounds, {"edges": n_new})
         if n_new == n_old or n_new == 0:
             break
         n_old = n_new
@@ -195,7 +195,7 @@ def ktruss(
 
 
 def truss_decomposition(
-    graph, max_k: int | None = None, max_rounds: int = 1000, on_round=None
+    graph, max_k: int | None = None, max_rounds: int = 1000, on_superstep=None
 ) -> tuple[DataFrame, int]:
     """Per-edge trussness: (src, dst, trussness) over all canonical
     (src < dst) edges, where trussness(e) = max k with e in the
@@ -210,8 +210,8 @@ def truss_decomposition(
     over the deepest single ktruss() call is just those anti-joins.
 
     Returns (assignments, total peel rounds across all levels).
-    ``on_round(total_rounds, surviving_edges)`` fires per inner peel
-    round, as in :func:`ktruss`."""
+    ``on_superstep(total_rounds, {"edges": surviving_edges})`` fires
+    per inner peel round, as in :func:`ktruss`."""
     e = (
         graph.edges.select("src", "dst")
         .filter(F.col("src") < F.col("dst"))
@@ -242,8 +242,8 @@ def truss_decomposition(
             )
             n_new = kept.count()
             e = kept
-            if on_round is not None:
-                on_round(rounds, n_new)
+            if on_superstep is not None:
+                on_superstep(rounds, {"edges": n_new})
             if n_new == n_old or n_new == 0:
                 n_old = n_new
                 break

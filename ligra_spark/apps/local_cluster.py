@@ -44,7 +44,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import IterState, edge_map
+from ..engine import IterState, edge_map, static_build_side
 
 __all__ = [
     "nibble",
@@ -55,19 +55,12 @@ __all__ = [
 ]
 
 
-def _deg_build(graph, deg):
-    """Static degree table as a join build side: broadcast while it
-    fits the 64 MB budget (16 B/row → 4M vertices), co-partitioned
-    shuffled-hash join at web scale."""
-    return F.broadcast(deg) if graph.n <= 4_000_000 else deg.hint("shuffle_hash")
-
-
 def nibble(
     graph,
     seeds,
     epsilon: float = 1e-9,
     max_rounds: int = 10,
-    on_iteration=None,
+    on_superstep=None,
 ) -> tuple[DataFrame, int]:
     """Batched multi-seed Nibble: returns ((seed, id, q) sparse walk
     state after ``max_rounds`` lazy steps — the reference's ``-T``,
@@ -77,7 +70,7 @@ def nibble(
     deg = graph.out_degrees.select(
         "id", F.col("outdeg").cast("long").alias("deg")
     )
-    deg_build = _deg_build(graph, deg)
+    deg_build = static_build_side(deg, graph.n)
     seeds_df = spark.createDataFrame([(int(s),) for s in seeds], "seed long")
     init = (
         seeds_df.join(deg, seeds_df["seed"] == deg["id"])
@@ -135,8 +128,8 @@ def nibble(
             .select("seed", "id", "q", F.coalesce("deg", F.lit(0)).alias("deg"))
         )
         _, counts = st.advance(merged, action=count_both)
-        if on_iteration:
-            on_iteration(rounds, fsize)
+        if on_superstep:
+            on_superstep(rounds, {"frontier": fsize})
         fsize = int(counts["f"] or 0)
     return st.df.select("seed", "id", "q"), rounds
 
@@ -160,7 +153,7 @@ def heat_kernel(
     t: float = 3.0,
     epsilon: float = 1e-9,
     n_terms: int = 1,
-    on_iteration=None,
+    on_superstep=None,
 ) -> tuple[DataFrame, int]:
     """Batched multi-seed synchronous hk-relax: returns ((seed, id, x)
     for every vertex that absorbed heat mass, levels run).  ``t`` is
@@ -174,7 +167,7 @@ def heat_kernel(
     deg = graph.out_degrees.select(
         "id", F.col("outdeg").cast("long").alias("deg")
     )
-    deg_build = _deg_build(graph, deg)
+    deg_build = static_build_side(deg, graph.n)
     seeds_df = spark.createDataFrame([(int(s),) for s in seeds], "seed long")
     # F_0 = the seed set itself, untested (HK-Parallel.C:126); the
     # is_front flag marks frontier membership so frozen seeds' rows
@@ -282,8 +275,8 @@ def heat_kernel(
         ).filter((F.col("x") != 0.0) | (F.col("r") != 0.0))
         _, counts = st.advance(merged, action=count_both)
         j += 1
-        if on_iteration:
-            on_iteration(j, fsize)
+        if on_superstep:
+            on_superstep(j, {"frontier": fsize})
         fsize = int(counts["f"] or 0)
         if last:
             break

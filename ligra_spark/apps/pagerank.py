@@ -100,7 +100,7 @@ def pagerank(
         )
         new = (
             st.df.select("id", "outdeg", F.col("rank").alias("old"))
-            .join(msgs.hint("shuffle_hash"), "id", "left")
+            .join(msgs_join_side(msgs, None, graph.n), "id", "left")
             .select(
                 "id",
                 "outdeg",
@@ -185,7 +185,7 @@ def pagerank_weighted(
         )
         new = (
             st.df.select("id", "wout", F.col("rank").alias("old"))
-            .join(msgs.hint("shuffle_hash"), "id", "left")
+            .join(msgs_join_side(msgs, None, graph.n), "id", "left")
             .select(
                 "id",
                 "wout",

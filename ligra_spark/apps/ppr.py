@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..engine import IterState, edge_map
+from ..engine import IterState, edge_map, static_build_side
 
 __all__ = ["ppr", "ppr_sweep"]
 
@@ -45,7 +45,7 @@ def ppr(
     alpha: float = 0.15,
     epsilon: float = 1e-9,
     max_iters: int = 10000,
-    on_iteration=None,
+    on_superstep=None,
 ) -> tuple[DataFrame, int]:
     """Batched multi-seed ACL push: returns ((seed, id, p, r) for all
     TOUCHED pairs, rounds run).  Rows with p > 0 are the vertices
@@ -58,13 +58,8 @@ def ppr(
     deg = graph.out_degrees.select(
         "id", F.col("outdeg").cast("long").alias("deg")
     )
-    # the per-round merge needs degrees for newly-touched rows; the deg
-    # table is static, so broadcast it while it fits the 64 MB
-    # broadcast budget (16 B/row → 4M vertices) and fall back to the
-    # co-partitioned shuffled-hash join at web scale
-    deg_build = (
-        F.broadcast(deg) if graph.n <= 4_000_000 else deg.hint("shuffle_hash")
-    )
+    # the per-round merge needs degrees for newly-touched rows
+    deg_build = static_build_side(deg, graph.n)
     seeds_df = spark.createDataFrame(
         [(int(s),) for s in seeds], "seed long"
     )
@@ -149,8 +144,8 @@ def ppr(
             )
         )
         _, counts = st.advance(merged, action=count_both)
-        if on_iteration:
-            on_iteration(rounds, fsize)
+        if on_superstep:
+            on_superstep(rounds, {"frontier": fsize})
         fsize = int(counts["f"] or 0)
     return st.df.select("seed", "id", "p", "r"), rounds
 

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..buckets import Buckets
-from ..engine import IterState
+from ..engine import IterState, frontier_is_sparse
 
 __all__ = ["setcover"]
 
@@ -66,8 +66,8 @@ def setcover(
             break
         rounds += 1
         active = b.active(st.df, k).select("id")
-        fsize = active.count()
-        f = F.broadcast(active) if fsize <= max(1024, graph.m // 20) else active
+        sparse = frontier_is_sparse(active.count(), graph.m)
+        f = F.broadcast(active) if sparse else active
         # uncovered out-edges of the active sets (edge-level, dups
         # count).  eu and the small per-round derivations are CACHED
         # for the round: they are consumed 3-4 times (count, acquire,
@@ -97,7 +97,7 @@ def setcover(
         thr = int(math.ceil((1.0 + epsilon) ** k))
         low = max(int(math.ceil((1.0 + epsilon) ** (k - 1))), 1)
         still = cnt.filter(F.col("newdeg") >= thr).select(F.col("id").alias("sid"))
-        if fsize <= max(1024, graph.m // 20):  # still/winners ⊆ active
+        if sparse:  # still/winners ⊆ active
             still = F.broadcast(still)
         es = eu.join(still, F.col("src") == F.col("sid")).select("src", "dst")
         # Won-edge counting WITHOUT joining es back to itself (a
@@ -119,7 +119,7 @@ def setcover(
         )
         winners = won.filter(F.col("n_won") >= low).select("id").persist()
         winners.count()
-        wjoin = F.broadcast(winners) if fsize <= max(1024, graph.m // 20) else winners
+        wjoin = F.broadcast(winners) if sparse else winners
         newly_covered = (
             owners.join(
                 wjoin.select(F.col("id").alias("winner_id")),

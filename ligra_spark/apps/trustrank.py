@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import IterState, edge_map
+from ..engine import IterState, edge_map, msgs_join_side
 
 __all__ = ["trustrank"]
 
@@ -87,7 +87,7 @@ def trustrank(
         )
         new = (
             st.df.select("id", "outdeg", "tele", F.col("trust").alias("old"))
-            .join(msgs.hint("shuffle_hash"), "id", "left")
+            .join(msgs_join_side(msgs, None, graph.n), "id", "left")
             .select(
                 "id",
                 "outdeg",

@@ -286,12 +286,7 @@ def make_csr_edge_map(pack: CsrPack, sparse_fallback: bool = True):
             raise NotImplementedError(
                 "CSR backend covers the single-payload out-edge hot path"
             )
-        if (
-            sparse_fallback
-            and frontier_size is not None
-            and frontier_size
-            <= max(1024, int(engine.SPARSE_DENSE_FRACTION * graph.m))
-        ):
+        if sparse_fallback and engine.frontier_is_sparse(frontier_size, graph.m):
             return engine.edge_map(
                 graph,
                 frontier,

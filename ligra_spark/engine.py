@@ -16,6 +16,10 @@ Physical mapping (SURVEY.md §2.1, §4):
   large we rely on co-partitioned join reuse (dense — still no edge
   shuffle, because edges are pre-partitioned on src and state on id).
   Either way the ONLY per-superstep shuffle is the groupBy(dst).
+  All four edge-map primitives build their join in ONE place,
+  ``_frontier_join`` (``edge_map`` is the one-aggregate case of
+  ``edge_map_multi``; induced/filter force its sparse branch), and
+  every frontier-size threshold lives in the block above it.
 - ``vertex_map``     — a column expression over the state DataFrame.
 - ``vertex_filter``  — ``state.filter(pred)``  (``ligra.h:410-459``;
   Spark's filter is already pbbs::pack).
@@ -50,14 +54,42 @@ __all__ = [
     "IterState",
     "cut_lineage",
     "msgs_join_side",
+    "frontier_is_sparse",
+    "static_build_side",
+    "sparse_tail_cut",
     "SPARSE_DENSE_FRACTION",
 ]
+
+# ------------------------------------------------------------ thresholds
+# Every "is the frontier small?" rule; apps call these, never a copy.
 
 # Ligra switches sparse→dense when |frontier| + outdeg(frontier) > m/20
 # (ligra/ligra.h:237).  Our analog: broadcast the frontier while its
 # row count is below this fraction of m (broadcast cost ~ frontier
 # size; dense co-partitioned join cost ~ state size).
 SPARSE_DENSE_FRACTION = 1.0 / 20.0
+
+
+def frontier_is_sparse(frontier_size: int | None, m: int) -> bool:
+    """Edge-map direction: push sparse (broadcast) a frontier of known
+    size ≤ max(1024, m/20); an unknown size (``None``) is dense."""
+    return frontier_size is not None and frontier_size <= max(
+        1024, int(SPARSE_DENSE_FRACTION * m)
+    )
+
+
+def static_build_side(table: DataFrame, n: int) -> DataFrame:
+    """A static per-vertex table (degrees) joined every round: broadcast
+    while it fits the 64 MB budget (16 B/row → 4M vertices), else
+    shuffled-hash."""
+    return F.broadcast(table) if n <= 4_000_000 else table.hint("shuffle_hash")
+
+
+def sparse_tail_cut(n: int) -> int:
+    """Frontier size at or below which a convergence tail writes only
+    the changed rows (``IterState.advance_sparse``), not the n-row
+    state: n/20, at least 1024, at most n/4."""
+    return min(max(1024, n // 20), n // 4)
 
 
 def msgs_join_side(msgs: DataFrame, frontier_size: int | None, n: int):
@@ -74,43 +106,19 @@ def msgs_join_side(msgs: DataFrame, frontier_size: int | None, n: int):
     still overflows it just falls back to AQE's own choice at
     runtime.  This is the convergence-tail fix measured on
     components (2→8-core efficiency 0.34 → 0.56 on a 16M-edge rMat)
-    generalized to every frontier app."""
+    generalized to every frontier app.  ``frontier_size=None`` (an
+    all-active superstep) always hints."""
     if frontier_size is not None and frontier_size <= max(1024, n // 64):
         return msgs
     return msgs.hint("shuffle_hash")
 
 
-def edge_map(
-    graph,
-    frontier: DataFrame,
-    message: Column,
-    aggregate,
-    frontier_size: int | None = None,
-    in_edges: bool = False,
-    extra_frontier_cols: tuple[str, ...] = (),
-    group_frontier_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """One gather-scatter pass: returns (id, agg) for every vertex that
-    received at least one message.
-
-    frontier  : DataFrame with an ``id`` column (+ payload columns used
-                by ``message``) — sparse vertexSubset analog.
-    message   : Column over the joined (frontier ⋈ edges) row; may
-                reference frontier payload cols, ``src``, ``dst``,
-                ``weight``.
-    aggregate : callable(Column) -> Column, the monoid (F.sum, F.min,
-                F.max, F.bit_or, ...) — replaces updateAtomic
-                (writeAdd/writeMin/writeOr, ``ligra/utils.h:305-333``).
-    frontier_size : pass the known count to drive the sparse/dense
-                broadcast decision without an extra job (Ligra computes
-                the same from cached degrees, ``ligra.h:248-261``).
-    group_frontier_cols : frontier payload columns ADDED to the
-                groupBy key — batched multi-instance runs (one logical
-                frontier per seed/sample sharing one physical pass,
-                e.g. multi-seed PPR) aggregate per (col..., dst) in
-                the same single shuffle.  Must be listed in
-                ``extra_frontier_cols``.
-    """
+# ------------------------------------------------------- frontier ⋈ edges
+def _frontier_join(graph, frontier, frontier_cols, sparse: bool, in_edges=False):
+    """frontier ⋈ edges ON src for every edge-map primitive; returns
+    (f, e, joined).  The frontier is always the hinted LEFT side
+    (broadcast when sparse, shuffled-hash build side otherwise) —
+    perfbench reads the branch taken from exactly that shape."""
     edges = graph.edges_in if in_edges else graph.edges
     # re-alias edge columns to fresh exprIds: frontier state usually
     # derives from the same edge table (degrees), which would otherwise
@@ -120,10 +128,7 @@ def edge_map(
         [F.col("weight").alias("weight")] if "weight" in edges.columns else []
     ) + ([F.col("salt").alias("salt")] if salted else [])
     e = edges.select(*ecols)
-    f = frontier.select("id", *extra_frontier_cols)
-    sparse = frontier_size is not None and frontier_size <= max(
-        1024, int(SPARSE_DENSE_FRACTION * graph.m)
-    )
+    f = frontier.select("id", *frontier_cols)
     if sparse:
         # sparse push: broadcast the small frontier — no edge movement
         # (edge partitioning, salted or not, is irrelevant to a BHJ)
@@ -149,15 +154,39 @@ def edge_map(
         # never moves (it is already hash(src)-partitioned).
         f = f.hint("shuffle_hash")
         cond = f["id"] == e["src"]
-    joined = f.join(e, cond)
-    return (
-        joined.select(
-            e["dst"].alias("_dst"),
-            *[f[c] for c in group_frontier_cols],
-            message.alias("_msg"),
-        )
-        .groupBy(F.col("_dst").alias("id"), *group_frontier_cols)
-        .agg(aggregate(F.col("_msg")).alias("agg"))
+    return f, e, f.join(e, cond)
+
+
+def edge_map(
+    graph,
+    frontier: DataFrame,
+    message: Column,
+    aggregate,
+    frontier_size: int | None = None,
+    in_edges: bool = False,
+    extra_frontier_cols: tuple[str, ...] = (),
+    group_frontier_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """One gather-scatter pass: returns (id, agg) for every vertex that
+    received at least one message — the one-aggregate case of
+    :func:`edge_map_multi`.
+
+    frontier  : DataFrame with an ``id`` column (+ payload columns used
+                by ``message``) — sparse vertexSubset analog.
+    message   : Column over the joined (frontier ⋈ edges) row; may
+                reference frontier payload cols, ``src``, ``dst``,
+                ``weight``.
+    aggregate : callable(Column) -> Column, the monoid (F.sum, F.min,
+                F.max, F.bit_or, ...) — replaces updateAtomic
+                (writeAdd/writeMin/writeOr, ``ligra/utils.h:305-333``).
+    frontier_size : pass the known count to drive the sparse/dense
+                broadcast decision without an extra job (Ligra computes
+                the same from cached degrees, ``ligra.h:248-261``).
+    group_frontier_cols : see :func:`edge_map_multi`.
+    """
+    return edge_map_multi(
+        graph, frontier, [("agg", message, aggregate)], frontier_size,
+        in_edges, extra_frontier_cols, group_frontier_cols,
     )
 
 
@@ -168,44 +197,33 @@ def edge_map_multi(
     frontier_size: int | None = None,
     in_edges: bool = False,
     extra_frontier_cols: tuple[str, ...] = (),
+    group_frontier_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """edge_map with a VECTOR monoid: ``aggs`` is a list of
     ``(name, message_col, aggregate_fn)`` triples reduced in the SAME
     single groupBy(dst) shuffle — the plan twin of Ligra's
     ``edgeMapReduce`` over a tuple payload (``edgeMapReduce.h:57-74``
-    with a struct monoid).  Returns (id, <name>...) for every vertex
-    that received at least one message.  Used by apps whose per-vertex
-    state is a small fixed vector (LogLog registers, CF latent dims)."""
-    edges = graph.edges_in if in_edges else graph.edges
-    salted = getattr(graph, "salt_buckets", 1) > 1 and "salt" in edges.columns
-    ecols = [F.col("src").alias("src"), F.col("dst").alias("dst")] + (
-        [F.col("weight").alias("weight")] if "weight" in edges.columns else []
-    ) + ([F.col("salt").alias("salt")] if salted else [])
-    e = edges.select(*ecols)
-    f = frontier.select("id", *extra_frontier_cols)
-    sparse = frontier_size is not None and frontier_size <= max(
-        1024, int(SPARSE_DENSE_FRACTION * graph.m)
+    with a struct monoid).  Returns (id, <group cols>..., <name>...)
+    for every vertex that received at least one message.  Used by apps
+    whose per-vertex state is a small fixed vector (LogLog registers,
+    CF latent dims).
+
+    group_frontier_cols : frontier payload columns ADDED to the
+                groupBy key — batched multi-instance runs (one logical
+                frontier per seed/sample sharing one physical pass,
+                e.g. multi-seed PPR) aggregate per (col..., dst) in
+                the same single shuffle.  Must be listed in
+                ``extra_frontier_cols``."""
+    f, e, joined = _frontier_join(
+        graph, frontier, extra_frontier_cols,
+        frontier_is_sparse(frontier_size, graph.m), in_edges,
     )
-    if sparse:
-        f = F.broadcast(f)
-        cond = f["id"] == e["src"]
-    elif salted:
-        f = f.select(
-            "*",
-            F.explode(F.sequence(F.lit(0), F.lit(graph.salt_buckets - 1))).alias(
-                "fsalt"
-            ),
-        ).hint("shuffle_hash")
-        cond = (f["id"] == e["src"]) & (f["fsalt"] == e["salt"])
-    else:
-        f = f.hint("shuffle_hash")
-        cond = f["id"] == e["src"]
-    joined = f.join(e, cond)
     projected = joined.select(
         e["dst"].alias("_dst"),
+        *[f[c] for c in group_frontier_cols],
         *[msg.alias(f"_m_{name}") for name, msg, _ in aggs],
     )
-    return projected.groupBy(F.col("_dst").alias("id")).agg(
+    return projected.groupBy(F.col("_dst").alias("id"), *group_frontier_cols).agg(
         *[agg(F.col(f"_m_{name}")).alias(name) for name, _, agg in aggs]
     )
 
@@ -216,10 +234,7 @@ def edge_map_induced(
     """One-hop neighborhood as a multiset — no dedup, no aggregation
     (``edgeMapInduced``, ``ligra/edgeMapReduce.h:9-38``).  Returns the
     joined (id, src, dst, ...) rows; callers aggregate or project."""
-    edges = graph.edges_in if in_edges else graph.edges
-    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
-    f = F.broadcast(frontier.select("id"))
-    out = f.join(e, f["id"] == e["src"])
+    _, _, out = _frontier_join(graph, frontier, (), sparse=True, in_edges=in_edges)
     return out.select(*(select_cols or ["src", "dst"]))
 
 
@@ -227,11 +242,9 @@ def edge_map_filter(graph, frontier: DataFrame, pred: Column) -> DataFrame:
     """Count surviving out-neighbors per frontier vertex under ``pred``
     (``edgeMapFilter``, ``ligra/ligra.h:336-368``): returns
     (id, degree).  Counts only — does not mutate the graph."""
-    e = graph.edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
-    f = F.broadcast(frontier.select("id"))
+    _, _, out = _frontier_join(graph, frontier, (), sparse=True)
     return (
-        f.join(e, f["id"] == e["src"])
-        .filter(pred)
+        out.filter(pred)
         .groupBy(F.col("src").alias("id"))
         .agg(F.count(F.lit(1)).alias("degree"))
     )

@@ -62,6 +62,8 @@ def _decode_rle(data: bytes, w: int, h: int, four_bit: bool) -> np.ndarray:
             cnt = b1
             if y >= h:
                 raise ValueError("BMP RLE absolute run past last row")
+            if x > w:  # an earlier run overran the row
+                raise ValueError("BMP RLE absolute run past row end")
             if four_bit:
                 nbytes = (cnt + 1) // 2
                 if i + nbytes > n:

@@ -118,7 +118,9 @@ class _BitReader:
         if self.nbits == 0 and not self._fill():
             raise ValueError("truncated JPEG entropy data")
         self.nbits -= 1
-        return (self.bitbuf >> self.nbits) & 1
+        bit = (self.bitbuf >> self.nbits) & 1
+        self.bitbuf &= (1 << self.nbits) - 1  # unmasked: O(scan²) decode
+        return bit
 
     def receive(self, n: int) -> int:
         v = 0
@@ -690,6 +692,7 @@ class _BitWriter:
             self.out.append(byte)
             if byte == 0xFF:  # byte stuffing
                 self.out.append(0x00)
+        self.bitbuf &= (1 << self.nbits) - 1  # keep only unwritten bits
 
     def flush(self) -> None:
         if self.nbits:

@@ -206,10 +206,10 @@ def _decode_wav_pcm(buf: bytes) -> tuple[np.ndarray, int]:
 
 
 def _decode_image_bytes(payload: bytes, fake: bool) -> np.ndarray:
-    """Codec boundary.  P6 PPM, JPEG, PNG, GIF and BMP
-    decode NATIVELY (pure numpy / stdlib zlib); the remaining
-    compressed formats (WebP/AVIF/...) need Pillow/ffmpeg, absent
-    here, so they raise unless ``fake=True`` selects the
+    """Codec boundary.  P6 PPM, JPEG, PNG, GIF, BMP, TIFF and lossless
+    WebP decode NATIVELY (pure numpy / stdlib zlib); the remaining
+    compressed formats (lossy WebP, AVIF, ...) need Pillow/ffmpeg,
+    absent here, so they raise unless ``fake=True`` selects the
     deterministic fake decoder."""
     if payload[:2] == b"P6" and payload[2:3] in (
         *(bytes([c]) for c in _WS), b"#",

@@ -35,7 +35,9 @@ __all__ = ["HyperGraph", "vertex_prop", "hyperedge_prop"]
 @dataclass
 class _Direction:
     """One direction of the incidence, shaped like a LinkGraph for
-    ``engine.edge_map`` (edges/m/salt_buckets are all it reads)."""
+    ``engine.edge_map``: its one frontier ⋈ edges join reads only
+    edges and salt_buckets, and the direction rule
+    (``engine.frontier_is_sparse``) reads m."""
 
     edges: DataFrame
     m: int

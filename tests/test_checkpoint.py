@@ -174,12 +174,12 @@ def test_ktruss_kill_resume_identical(spark, tiny_graph_sym, tmp_path):
 
     mgr = CheckpointManager(spark, str(tmp_path / "ckpt_kt"))
 
-    def killer(r, edges):
+    def killer(r, info):
         if r == 2:
             raise _Kill()
 
     with pytest.raises(_Kill):
-        ktruss(tiny_graph_sym, 4, checkpoint_mgr=mgr, on_round=killer)
+        ktruss(tiny_graph_sym, 4, checkpoint_mgr=mgr, on_superstep=killer)
     assert mgr.latest_step("ktruss") == 2
     assert mgr.metadata("ktruss", 2)["metrics"]["edges_before_round"] > 0
 

@@ -350,11 +350,13 @@ def test_bmp_rle_escapes_and_corruption():
 
     pal16 = np.arange(48, dtype=np.uint8).reshape(16, 3)
 
-    def rle4(stream, w, h):
+    def rle4(stream, w, h, bpp=4):
         bgra = np.zeros((16, 4), dtype=np.uint8)
         bgra[:, :3] = pal16[:, ::-1]
+        compression = 2 if bpp == 4 else 1  # BI_RLE4 / BI_RLE8
         info = struct.pack(
-            "<IiiHHIIiiII", 40, w, h, 1, 4, 2, len(stream), 0, 0, 16, 0
+            "<IiiHHIIiiII", 40, w, h, 1, bpp, compression, len(stream),
+            0, 0, 16, 0,
         )
         off = 14 + 40 + 64
         return (
@@ -380,6 +382,12 @@ def test_bmp_rle_escapes_and_corruption():
         decode_bmp(rle4(bytes([0, 2, 200, 200]), 8, 3))
     with pytest.raises(ValueError):
         decode_bmp(rle4(bytes([0, 9, 0x11]), 8, 3))
+    # an encoded run overrunning the row, then an absolute run: a clear
+    # contract error, not a raw numpy broadcast error
+    overrun = bytes([10, 1, 0, 5, 1, 2, 3, 4, 5, 0])
+    for bpp in (8, 4):
+        with pytest.raises(ValueError, match="BMP RLE"):
+            decode_bmp(rle4(overrun, 8, 1, bpp=bpp))
     # fuzz: random mutations fail cleanly or decode bounded
     rng = np.random.RandomState(3)
     good = encode_bmp_rle8(rng.randint(0, 4, (6, 9)).astype(np.uint8),
@@ -477,6 +485,37 @@ def test_ppm_sniff_matches_decoder_separators():
         payload = b"P6" + bytes([sep]) + b"\n2 2\n255\n" + bytes(12)
         arr = _decode_image_bytes(payload, fake=False)
         assert arr.shape == (2, 2, 3)
+
+
+def test_jpeg_bit_buffers_stay_bounded(monkeypatch):
+    # Consumed bits must be dropped as they are read (and written):
+    # a buffer that grows to the whole scan makes every shift O(scan)
+    # and decode time quadratic in the coded size.  Noise, not flat
+    # blocks, so the scan is long (flat fixtures hid this).
+    from ligra_spark.functions import jpeg
+
+    widest = {"read": 0, "write": 0}
+
+    def watch(kind, fn):
+        def wrapped(self, *args):
+            out = fn(self, *args)
+            widest[kind] = max(widest[kind], self.bitbuf.bit_length())
+            return out
+
+        return wrapped
+
+    for cls, name, kind in (
+        (jpeg._BitReader, "read_bit", "read"),
+        (jpeg._BitWriter, "write", "write"),
+    ):
+        monkeypatch.setattr(cls, name, watch(kind, getattr(cls, name)))
+    rng = np.random.RandomState(9)
+    img = rng.randint(0, 256, (48, 48, 3)).astype(np.uint8)
+    for enc in (jpeg.encode_jpeg_baseline, jpeg.encode_jpeg_progressive):
+        buf = enc(img)
+        assert len(buf) > 4096
+        jpeg.decode_jpeg(buf)
+    assert 0 < widest["read"] < 64 and 0 < widest["write"] < 64, widest
 
 
 def test_jpeg_fill_bytes_and_stray_standalone_markers():

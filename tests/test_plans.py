@@ -119,6 +119,80 @@ def test_msgs_join_side_policy(spark, tiny_graph):
     assert "ShuffledHashJoin" not in head2 or "Broadcast" in head2, head2
 
 
+def _first_join_left_hint(df) -> str:
+    """Hint on the left child of the first join from the top of the
+    analyzed plan ('' when unhinted) — the frontier side of edge_map's
+    frontier ⋈ edges join, where perfbench reads the branch taken."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() != "Join":
+        node = node.children().apply(0)
+    left = node.left()
+    return left.hints().toString() if left.nodeName() == "ResolvedHint" else ""
+
+
+def test_edge_map_forced_branches_match_oracle(spark):
+    """edge_map and edge_map_multi under each branch of the one
+    frontier ⋈ edges join — sparse (frontier_size=1), dense
+    (frontier_size=None) and salted dense (salt_buckets=4) — return
+    identical rows, equal to a numpy oracle, for a plain and a
+    seed-grouped (batched multi-instance) frontier.  The graph is a
+    tiny rMat multigraph of the reference sample's shape (n=128,
+    m=708)."""
+    from collections import defaultdict
+
+    from conftest import edges_df
+    from ligra_spark.engine import edge_map, edge_map_multi
+    from ligra_spark.graph import LinkGraph
+    from ligra_spark.rmat import rmat_edges
+
+    n = 128
+    src, dst = rmat_edges(n, 708, seed=5)
+    plain = LinkGraph.from_edges(spark, edges_df(spark, src, dst), n=n).materialize()
+    salted = LinkGraph.from_edges(
+        spark, edges_df(spark, src, dst), n=n, salt_buckets=4
+    ).materialize()
+    # two seeds with overlapping frontiers: vertex v is in seed s's
+    # frontier when v % (3 + s) == 0, with payload v + 1000 s
+    rows = [(s, v, v + 1000 * s) for s in (0, 1) for v in range(n) if v % (3 + s) == 0]
+    frontier = spark.createDataFrame(rows, "seed long, id long, val long")
+
+    want_one, want_multi = {}, defaultdict(lambda: [0, None, 0])
+    for s_, v, val in rows:
+        for d in dst[src == v].tolist():
+            if s_ == 0:
+                want_one[d] = min(want_one.get(d, val), val)
+            acc = want_multi[(s_, d)]
+            acc[0] += val
+            acc[1] = val if acc[1] is None else max(acc[1], val)
+            acc[2] += 1
+    want_multi = {k: tuple(v) for k, v in want_multi.items()}
+    assert want_one and want_multi
+
+    cases = {
+        "sparse": (plain, 1, "broadcast"),
+        "dense": (plain, None, "shuffle_hash"),
+        "salted": (salted, None, "shuffle_hash"),
+    }
+    for branch, (g, fsize, hint) in cases.items():
+        one = edge_map(
+            g, frontier.filter("seed = 0"), message=F.col("val"), aggregate=F.min,
+            frontier_size=fsize, extra_frontier_cols=("val",),
+        )
+        multi = edge_map_multi(
+            g, frontier,
+            [("s", F.col("val"), F.sum), ("mx", F.col("val"), F.max),
+             ("c", F.lit(1), F.count)],
+            frontier_size=fsize, extra_frontier_cols=("seed", "val"),
+            group_frontier_cols=("seed",),
+        )
+        # the frontier is the hinted left side of the first join
+        assert hint in _first_join_left_hint(one), branch
+        assert hint in _first_join_left_hint(multi), branch
+        assert {r["id"]: r["agg"] for r in one.collect()} == want_one, branch
+        got = {(r["seed"], r["id"]): (r["s"], r["mx"], r["c"]) for r in multi.collect()}
+        assert got == want_multi, branch
+
+
 @pytest.fixture(scope="module")
 def small_emb(spark):
     import numpy as np
