@@ -68,9 +68,7 @@ def bc_single_source(
                 .alias("sigma"),
             )
         )
-        new, fsize = st.advance(
-            new, action=lambda df: df.filter(F.col("level") == nxt).count()
-        )
+        new, (fsize,) = st.advance(new, F.count_if(F.col("level") == nxt))
         if fsize > 0:
             lvl = nxt
             if on_superstep:

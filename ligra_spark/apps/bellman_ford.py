@@ -59,11 +59,11 @@ def bellman_ford(
                 ).alias("improved"),
             )
         )
-        new, fsize = st.advance(
+        new, (fsize,) = st.advance(
             new.select(
                 "id", "dist", F.coalesce("improved", F.lit(False)).alias("improved")
             ),
-            action=lambda df: df.filter("improved").count(),
+            F.count_if("improved"),
         )
         frontier = new.filter("improved").select("id", "dist")
         if on_superstep:

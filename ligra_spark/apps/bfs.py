@@ -63,9 +63,7 @@ def bfs_levels(
                 .alias("level"),
             )
         )
-        new, fsize = st.advance(
-            new, action=lambda df: df.filter(F.col("level") == nxt).count()
-        )
+        new, (fsize,) = st.advance(new, F.count_if(F.col("level") == nxt))
         if fsize > 0:
             lvl = nxt
             if on_superstep:

@@ -91,7 +91,7 @@ def bfscc(
                 .alias("label"),
                 (claim & (F.col("id") != root)).alias("_new"),
             )
-            new, fsize = st.advance(new, action=lambda df: df.filter("_new").count())
+            new, (fsize,) = st.advance(new, F.count_if("_new"))
             first = False
             if on_superstep:
                 on_superstep(total_rounds, {"frontier": fsize, "root": root})

@@ -39,18 +39,17 @@ from ..engine import IterState
 __all__ = ["cc_two_phase", "two_phase_star_pairs"]
 
 
-def _pair_signature(df: DataFrame):
+def _pair_signature() -> tuple:
     """Order-free fingerprint of the pair set (count + hash/field sums).
     Equal consecutive signatures ⇒ the star fixpoint was reached (the
     alternation provably converges to stars, SoCC'14 Thm 1)."""
-    row = df.agg(
+    return (
         F.count(F.lit(1)).alias("cnt"),
         # decimal accumulator: a long sum of 2^63-range hashes overflows
         F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
         F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
         F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-    ).first()
-    return (row["cnt"], row["h"], row["su"], row["sv"])
+    )
 
 
 def two_phase_star_pairs(
@@ -133,11 +132,9 @@ def two_phase_star_pairs(
             .distinct()
         )
         _, sig = st.advance(
-            ss,
-            action=_pair_signature,
-            metrics={"round": it, "pairs_in": n_pairs},
+            ss, *_pair_signature(), metrics={"round": it, "pairs_in": n_pairs}
         )
-        n_pairs = sig[0]
+        n_pairs = sig["cnt"]
         if on_superstep:
             on_superstep(it, {"pairs": n_pairs})
         if sig == prev_sig or n_pairs == 0:

@@ -109,9 +109,9 @@ def components(
                     (F.col("new_label") < F.col("label")).alias("changed"),
                 )
             )
-            new, n_changed = st.advance(
+            new, (n_changed,) = st.advance(
                 new,
-                action=lambda df: df.filter("changed").count(),
+                F.count_if("changed").alias("frontier"),
                 metrics={"superstep": it, "frontier_in": n_changed},
             )
             frontier = st.df.filter("changed").select("id", "label")
@@ -134,7 +134,7 @@ def components(
                     F.lit(True).alias("changed"),
                 )
             )
-            _, n_changed = st.advance_sparse(changes)
+            _, (n_changed,) = st.advance_sparse(changes)
             frontier = changes.select("id", "label")
         if on_superstep:
             on_superstep(it, {"frontier": n_changed})
@@ -223,9 +223,9 @@ def label_propagation(
                 (F.col("mlabel") != F.col("prev")).alias("active"),
             )
         )
-        new, n_active = st.advance(
+        new, (n_active,) = st.advance(
             new,
-            action=lambda df: df.filter("active").count(),
+            F.count_if("active").alias("active"),
             metrics={"superstep": it, "active_in": n_active},
         )
         if on_superstep:

@@ -73,9 +73,7 @@ def delta_stepping(
             .cast("long")
             .alias("bucket"),
         )
-        new, n_improved = st.advance(
-            new, action=lambda df: df.filter(F.col("bucket").isNotNull()).count()
-        )
+        new, (n_improved,) = st.advance(new, F.count_if(F.col("bucket").isNotNull()))
         if on_superstep:
             on_superstep(steps, {"bucket": k, "pending": n_improved})
     return st.df.filter(F.col("dist").isNotNull()).select("id", "dist"), steps

@@ -83,7 +83,7 @@ def _kbfs_wave(
                 (F.col("new_mask") != F.col("mask")).alias("changed"),
             )
         )
-        new, fsize = st.advance(new, action=lambda df: df.filter("changed").count())
+        new, (fsize,) = st.advance(new, F.count_if("changed"))
         if on_superstep:
             on_superstep(rounds, {"frontier": fsize})
     return st.df, rounds

@@ -120,9 +120,7 @@ def ecc_fm(
                 (F.col("to_write") != F.col("visited")).alias("in_frontier"),
             )
         )
-        new, fsize = st.advance(
-            new, action=lambda df: df.filter("in_frontier").count()
-        )
+        new, (fsize,) = st.advance(new, F.count_if("in_frontier"))
         if on_superstep:
             on_superstep(rounds, {"frontier": fsize})
     return st.df.select("id", F.col("ecc").cast("long").alias("ecc")), rounds

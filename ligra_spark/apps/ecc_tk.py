@@ -92,9 +92,7 @@ def _combined_bfs(
             .cast("int")
             .alias("level"),
         )
-        new, fsize = st.advance(
-            new, action=lambda df: df.filter(F.col("level") == nxt).count()
-        )
+        new, (fsize,) = st.advance(new, F.count_if(F.col("level") == nxt))
         lvl = nxt
     return st.df.filter(F.col("level").isNotNull()), lvl, st
 
@@ -199,9 +197,7 @@ def ecc_tk(graph, on_superstep=None) -> tuple[DataFrame, int]:
                 "active"
             ),
         )
-        new, n_active = st.advance(
-            upd, action=lambda df: df.filter("active").count()
-        )
+        new, (n_active,) = st.advance(upd, F.count_if("active"))
         # the advanced state is materialized — this iteration's cached
         # BFS state is dead; free it now (TK runs up to n iterations,
         # so leaking one n-row cache per iteration is not an option)

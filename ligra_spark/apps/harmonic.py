@@ -134,7 +134,7 @@ def harmonic_from_sources(
                 (F.col("new_mask") != F.col("mask")).alias("changed"),
             )
         )
-        new, fsize = st.advance(new, action=lambda df: df.filter("changed").count())
+        new, (fsize,) = st.advance(new, F.count_if("changed"))
         if on_superstep:
             on_superstep(rounds, {"frontier": fsize})
     out = st.df.select(

@@ -108,10 +108,9 @@ def hits(
         )
         new, row = st.advance(
             new,
-            action=lambda df: df.agg(
-                F.sum("auth_raw").alias("sa"), F.sum("hub_raw").alias("sh")
-            ).first(),
-            metrics={"superstep": it, "sh_prev": sh},
+            F.sum("auth_raw").alias("sa"),
+            F.sum("hub_raw").alias("sh"),
+            metrics={"superstep": it},
         )
         sa, sh = float(row["sa"]), float(row["sh"])
         if on_superstep:

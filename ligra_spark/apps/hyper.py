@@ -72,9 +72,7 @@ def hyper_bfs(
             .cast("int")
             .alias("level"),
         )
-        _, fsize = sth.advance(
-            newh, action=lambda df: df.filter(F.col("level") == hlvl).count()
-        )
+        _, (fsize,) = sth.advance(newh, F.count_if(F.col("level") == hlvl))
         steps += 1
         if on_superstep:
             on_superstep(steps, {"phase": "v->h", "frontier": fsize})
@@ -91,9 +89,7 @@ def hyper_bfs(
             .cast("int")
             .alias("level"),
         )
-        _, fsize = stv.advance(
-            newv, action=lambda df: df.filter(F.col("level") == nxt).count()
-        )
+        _, (fsize,) = stv.advance(newv, F.count_if(F.col("level") == nxt))
         steps += 1
         vlvl = nxt
         if on_superstep:
@@ -179,9 +175,7 @@ def hyper_bpath(
             .cast("int")
             .alias("level"),
         )
-        _, fsize = sth.advance(
-            newh, action=lambda df: df.filter(F.col("level") == hlvl).count()
-        )
+        _, (fsize,) = sth.advance(newh, F.count_if(F.col("level") == hlvl))
         steps += 1
         if on_superstep:
             on_superstep(steps, {"phase": "v->h", "frontier": fsize})
@@ -198,9 +192,7 @@ def hyper_bpath(
             .cast("int")
             .alias("level"),
         )
-        _, fsize = stv.advance(
-            newv, action=lambda df: df.filter(F.col("level") == nxt).count()
-        )
+        _, (fsize,) = stv.advance(newv, F.count_if(F.col("level") == nxt))
         steps += 1
         vlvl = nxt
         if on_superstep:
@@ -253,9 +245,8 @@ def hyper_cc(
                 & (F.col("label").isNull() | (F.col("agg") < F.col("label")))
             ).alias("changed"),
         )
-        _, n_changed_h = sth.advance(
-            newh.select("id", "label", "changed"),
-            action=lambda df: df.filter("changed").count(),
+        _, (n_changed_h,) = sth.advance(
+            newh.select("id", "label", "changed"), F.count_if("changed")
         )
         steps += 1
         if on_superstep:
@@ -279,9 +270,8 @@ def hyper_cc(
                 "changed"
             ),
         )
-        _, n_changed_v = stv.advance(
-            newv.select("id", "label", "changed"),
-            action=lambda df: df.filter("changed").count(),
+        _, (n_changed_v,) = stv.advance(
+            newv.select("id", "label", "changed"), F.count_if("changed")
         )
         steps += 1
         if on_superstep:
@@ -442,9 +432,7 @@ def hyper_kcore(
             (F.col("dead") | F.coalesce("_nd", F.lit(False))).alias("dead"),
             (~F.col("dead") & F.coalesce("_nd", F.lit(False))).alias("newly"),
         )
-        _, n_newly = sth.advance(
-            new_h, action=lambda df: df.filter("newly").count()
-        )
+        _, (n_newly,) = sth.advance(new_h, F.count_if("newly"))
         # decrement surviving members of newly-dead hyperedges (clamped)
         cnt = hyperedge_prop(
             hg, sth.df.filter("newly").select("id"),
@@ -468,10 +456,7 @@ def hyper_kcore(
             .alias("core"),
         )
         prev_active = n_active
-        _, n_active = stv.advance(
-            new_v,
-            action=lambda df: df.filter(F.col("core").isNull()).count(),
-        )
+        _, (n_active,) = stv.advance(new_v, F.count_if(F.col("core").isNull()))
         n_removed = prev_active - n_active
         if on_superstep:
             on_superstep(rounds, {"k": k, "removed": n_removed, "active": n_active})
@@ -548,9 +533,7 @@ def hyper_bc(
             .otherwise(F.col("sigma"))
             .alias("sigma"),
         )
-        _, fsize = sth.advance(
-            newh, action=lambda df: df.filter(F.col("level") == hlvl).count()
-        )
+        _, (fsize,) = sth.advance(newh, F.count_if(F.col("level") == hlvl))
         steps += 1
         if on_superstep:
             on_superstep(steps, {"phase": "fwd v->h", "frontier": fsize})
@@ -574,9 +557,7 @@ def hyper_bc(
             .otherwise(F.col("sigma"))
             .alias("sigma"),
         )
-        _, fsize = stv.advance(
-            newv, action=lambda df: df.filter(F.col("level") == nxt).count()
-        )
+        _, (fsize,) = stv.advance(newv, F.count_if(F.col("level") == nxt))
         steps += 1
         if on_superstep:
             on_superstep(steps, {"phase": "fwd h->v", "frontier": fsize})
@@ -710,9 +691,7 @@ def hyper_kcore_efficient(
             (F.col("dead") | F.coalesce("_nd", F.lit(False))).alias("dead"),
             (~F.col("dead") & F.coalesce("_nd", F.lit(False))).alias("newly"),
         )
-        _, n_newly = sth.advance(
-            new_h, action=lambda df: df.filter("newly").count()
-        )
+        _, (n_newly,) = sth.advance(new_h, F.count_if("newly"))
         cnt = hyperedge_prop(
             hg, sth.df.filter("newly").select("id"),
             F.lit(1), F.sum, frontier_size=n_newly,
@@ -785,9 +764,7 @@ def hyper_sssp(
                 & (F.col("dist").isNull() | (F.col("agg") < F.col("dist")))
             ).alias("improved"),
         )
-        _, fsize = sth.advance(
-            newh, action=lambda df: df.filter("improved").count()
-        )
+        _, (fsize,) = sth.advance(newh, F.count_if("improved"))
         steps += 1
         if on_superstep:
             on_superstep(steps, {"phase": "v->h", "frontier": fsize})
@@ -812,9 +789,7 @@ def hyper_sssp(
                 & (F.col("dist").isNull() | (F.col("agg") < F.col("dist")))
             ).alias("improved"),
         )
-        _, fsize = stv.advance(
-            newv, action=lambda df: df.filter("improved").count()
-        )
+        _, (fsize,) = stv.advance(newv, F.count_if("improved"))
         steps += 1
         frontier = stv.df.filter("improved").select("id", "dist")
         if on_superstep:
@@ -938,9 +913,7 @@ def hyper_mis(
                 .alias("flag"),
             )
         )
-        _, n_undecided = stv.advance(
-            newv, action=lambda df: df.filter("flag = 0").count()
-        )
+        _, (n_undecided,) = stv.advance(newv, F.count_if(F.col("flag") == 0))
         for t in (vt, veto, packed, pdeg):
             t.unpersist()
         if on_superstep:

@@ -39,14 +39,14 @@ def kcore(
         from the same action that persists the state, instead of 2-3
         separate count jobs per step (the driver-sync tail cost)."""
         alive = F.col("core").isNull()
-        return lambda df: df.agg(
+        return (
             F.sum((alive & (F.col("deg") < k)).cast("long")).alias("p_k"),
             F.sum(alive.cast("long")).alias("alive"),
             F.min(F.when(alive, F.col("deg"))).alias("min_deg"),
-        ).first()
+        )
 
     # seed counts for k=1 (one job on the initial state)
-    row = _phase_counts(1)(st.df)
+    row = st.df.agg(*_phase_counts(1)).first()
     psize, n_alive, min_deg = row["p_k"], row["alive"], row["min_deg"]
     k = 1
     while k <= kmax and n_alive > 0:
@@ -82,7 +82,7 @@ def kcore(
                 .alias("core"),
             )
         )
-        _, row = st.advance(new, action=_phase_counts(k))
+        _, row = st.advance(new, *_phase_counts(k))
         psize, n_alive, min_deg = row["p_k"], row["alive"], row["min_deg"]
         if on_superstep:
             on_superstep(steps, {"k": k, "remaining": psize})

@@ -62,9 +62,7 @@ def kcore_julienne(graph, on_superstep=None) -> tuple[DataFrame, int]:
             .alias("bucket"),
             F.when(peel, F.lit(k)).otherwise(F.col("core")).cast("long").alias("core"),
         )
-        new, _ = st.advance(
-            new, action=lambda df: df.filter(F.col("bucket").isNotNull()).count()
-        )
+        st.advance(new)
         if on_superstep:
             on_superstep(steps, {"bucket": k, "peeled": fsize})
     return st.df.select("id", F.coalesce("core", F.lit(0)).alias("core")), steps

@@ -175,7 +175,7 @@ def ktruss(
             # files (lineage cut) with REAL file statistics (stats cut)
             # — the durable twin of cut_lineage — and makes the round
             # resumable
-            kept = checkpoint_mgr.save(
+            kept, _ = checkpoint_mgr.save(
                 kept, name, rounds, {"round": rounds, "edges_before_round": n_old}
             )
         else:

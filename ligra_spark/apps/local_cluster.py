@@ -84,10 +84,7 @@ def nibble(
     is_front = (F.col("deg") > 0) & (F.col("q") > F.col("deg") * F.lit(epsilon))
     # next round's frontier size rides along with each advance's
     # materializing agg — one job per round instead of count + advance
-    count_both = lambda df: df.agg(  # noqa: E731
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(is_front, 1).otherwise(0)).alias("f"),
-    ).collect()[0]
+    count_front = F.count_if(is_front).alias("f")
     fsize = int(init.agg(F.sum(F.when(is_front, 1).otherwise(0))).collect()[0][0] or 0)
     while rounds < max_rounds:
         if fsize == 0:
@@ -127,7 +124,7 @@ def nibble(
             .join(deg_build, "id", "left")
             .select("seed", "id", "q", F.coalesce("deg", F.lit(0)).alias("deg"))
         )
-        _, counts = st.advance(merged, action=count_both)
+        _, counts = st.advance(merged, count_front)
         if on_superstep:
             on_superstep(rounds, {"frontier": fsize})
         fsize = int(counts["f"] or 0)
@@ -187,10 +184,7 @@ def heat_kernel(
     st = IterState(init, num_partitions=graph.num_partitions)
     # next level's frontier size rides along with each advance's
     # materializing agg — one job per level instead of count + advance
-    count_both = lambda df: df.agg(  # noqa: E731
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("is_front"), 1).otherwise(0)).alias("f"),
-    ).collect()[0]
+    count_front = F.count_if("is_front").alias("f")
     fsize = int(
         init.agg(F.sum(F.when(F.col("is_front"), 1).otherwise(0))).collect()[0][0] or 0
     )
@@ -273,7 +267,7 @@ def heat_kernel(
         merged = merged.unionByName(
             frozen.select("seed", "id", "x", "r", "is_front", "deg")
         ).filter((F.col("x") != 0.0) | (F.col("r") != 0.0))
-        _, counts = st.advance(merged, action=count_both)
+        _, counts = st.advance(merged, count_front)
         j += 1
         if on_superstep:
             on_superstep(j, {"frontier": fsize})
@@ -440,10 +434,7 @@ def heat_kernel_rand(
         cdf_next = cdf + probs[j + 1] if j + 1 < k_max else float("inf")
         _, counts = st.advance(
             moved.unionByName(done),
-            action=lambda df, t=cdf_next: df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("u") >= F.lit(t), 1).otherwise(0)).alias("f"),
-            ).collect()[0],
+            F.count_if(F.col("u") >= F.lit(cdf_next)).alias("f"),
         )
         n_live = int(counts["f"] or 0)
     p = (

@@ -71,7 +71,7 @@ def mis(graph, max_iters: int = 10_000, on_superstep=None) -> tuple[DataFrame, i
                 (F.col("in_set") | F.col("winner")).alias("in_set"),
             )
         )
-        new, n_live = st.advance(new, action=lambda df: df.filter("live").count())
+        new, (n_live,) = st.advance(new, F.count_if("live"))
         if on_superstep:
             on_superstep(it, {"live": n_live})
     return st.df.select("id", "in_set"), it

@@ -17,7 +17,8 @@ Physical plan per superstep (exactly ONE shuffle):
                                               absorb hub skew map-side]
       ⋈ state ON id = dst              [both hash(id) → no exchange]
       → new state + old rank column
-    L1 = agg(sum(abs(rank - old)))     [the materializing action]
+    L1 = sum(abs(rank - old))          [computed by the state write's
+                                        query: IterState.advance]
 """
 
 from __future__ import annotations
@@ -86,7 +87,6 @@ def pagerank(
         name=name,
         superstep=it,
     )
-    l1_prev = None  # previous superstep's L1 delta (known at save time)
     while it < max_iters:
         it += 1
         # dense superstep: every vertex is in the frontier every round
@@ -110,12 +110,11 @@ def pagerank(
                 "old",
             )
         )
-        new, row = st.advance(
+        new, (l1,) = st.advance(
             new.select("id", "outdeg", "rank", "old"),
-            action=lambda df: df.agg(F.sum(F.abs(F.col("rank") - F.col("old")))).first(),
-            metrics={"superstep": it, "l1_prev": l1_prev},
+            F.sum(F.abs(F.col("rank") - F.col("old"))).alias("l1"),
+            metrics={"superstep": it},
         )
-        l1 = l1_prev = row[0]
         if on_superstep:
             on_superstep(it, {"l1": l1})
         if l1 < epsilon:
@@ -195,14 +194,11 @@ def pagerank_weighted(
                 "old",
             )
         )
-        new, row = st.advance(
+        new, (l1,) = st.advance(
             new,
-            action=lambda df: df.agg(
-                F.sum(F.abs(F.col("rank") - F.col("old")))
-            ).first(),
+            F.sum(F.abs(F.col("rank") - F.col("old"))).alias("l1"),
             metrics={"superstep": it},
         )
-        l1 = row[0]
         if on_superstep:
             on_superstep(it, {"l1": l1})
         if epsilon > 0 and l1 < epsilon:
@@ -293,10 +289,8 @@ def pagerank_delta(
             )
         new, row = st.advance(
             new.select("id", "outdeg", "p", "delta", "active"),
-            action=lambda df: df.agg(
-                F.sum(F.abs("delta")).alias("l1"),
-                F.sum(F.col("active").cast("long")).alias("na"),
-            ).first(),
+            F.sum(F.abs("delta")).alias("l1"),
+            F.sum(F.col("active").cast("long")).alias("na"),
         )
         l1, n_active = row["l1"], int(row["na"])
         if on_superstep:

@@ -85,10 +85,7 @@ def ppr(
     is_front = (F.col("deg") > 0) & (F.col("r") > F.col("deg") * F.lit(epsilon))
     # the next round's frontier size rides along with each advance's
     # materializing agg — ONE job per round, not a count + an advance
-    count_both = lambda df: df.agg(  # noqa: E731
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(is_front, 1).otherwise(0)).alias("f"),
-    ).collect()[0]
+    count_front = F.count_if(is_front).alias("f")
     # round 1's frontier is at most the seed set (r=1.0 on every
     # surviving seed), so len(seeds) serves as the sparse-path size
     # hint WITHOUT a driver-side pre-job; the exact size arrives with
@@ -143,7 +140,7 @@ def ppr(
                 "seed", "id", "p", "r", F.coalesce("deg", F.lit(0)).alias("deg")
             )
         )
-        _, counts = st.advance(merged, action=count_both)
+        _, counts = st.advance(merged, count_front)
         if on_superstep:
             on_superstep(rounds, {"frontier": fsize})
         fsize = int(counts["f"] or 0)

@@ -153,9 +153,7 @@ def setcover(
             new_in_cover.alias("in_cover"),
             (F.col("covered") | F.col("nid").isNotNull()).alias("covered"),
         )
-        new, n_live = st.advance(
-            new, action=lambda df: df.filter(F.col("bucket").isNotNull()).count()
-        )
+        new, (n_live,) = st.advance(new, F.count_if(F.col("bucket").isNotNull()))
         for transient in (eu, cnt, owners, winners):
             transient.unpersist()
         if on_superstep:

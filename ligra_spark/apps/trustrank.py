@@ -75,7 +75,6 @@ def trustrank(
         name=name,
         superstep=it,
     )
-    l1_prev = None
     while it < max_iters:
         it += 1
         msgs = edge_map(
@@ -98,14 +97,11 @@ def trustrank(
                 "old",
             )
         )
-        new, row = st.advance(
+        new, (l1,) = st.advance(
             new.select("id", "outdeg", "tele", "trust", "old"),
-            action=lambda df: df.agg(
-                F.sum(F.abs(F.col("trust") - F.col("old")))
-            ).first(),
-            metrics={"superstep": it, "l1_prev": l1_prev},
+            F.sum(F.abs(F.col("trust") - F.col("old"))).alias("l1"),
+            metrics={"superstep": it},
         )
-        l1 = l1_prev = row[0]
         if on_superstep:
             on_superstep(it, {"l1": l1})
         if l1 < epsilon:

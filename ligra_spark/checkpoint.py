@@ -16,6 +16,15 @@ metadata JSON for Iceberg snapshot properties):
                                                the file list, each file
                                                holding one hash bucket
 
+One durable superstep is ONE Spark query: ``save`` writes the
+superstep's plan, hash-repartitioned on ``id``, with the caller's
+convergence aggregates attached as an ``observe`` above the last
+exchange, so the write's result stage computes them exactly once.  The
+observed values go into ``_META.json``'s ``metrics``, and the returned
+state is a re-read of the written files with the schema recorded in
+``_META.json`` — no schema-inference job, no cache, no second action.
+``load`` (resume) reads the same way.
+
 Writes are atomic-by-rename of _META.json: a crash mid-write leaves no
 _META.json, so ``latest_step`` never returns a torn checkpoint.
 """
@@ -26,8 +35,8 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
+from pyspark.sql.types import StructType
 
 __all__ = ["CheckpointManager"]
 
@@ -51,9 +60,13 @@ class CheckpointManager:
         step: int,
         metrics: dict,
         num_partitions: int | None = None,
-    ) -> DataFrame:
-        """Write a superstep's state; returns the re-read DataFrame
-        (plan lineage now roots at the files — truncation for free).
+        aggs: tuple[Column, ...] = (),
+    ) -> tuple[DataFrame, Row]:
+        """Write a superstep's state in one Spark query; returns
+        (re-read DataFrame, Row of ``aggs`` observed on the write).
+        The plan lineage of the re-read roots at the files (truncation
+        for free), and ``_META.json`` records ``metrics`` plus the
+        observed values.
 
         The write preserves hash-bucket layout: the DataFrame is
         repartitioned on ``id`` so each output file is one hash bucket
@@ -64,26 +77,37 @@ class CheckpointManager:
         out = df
         if num_partitions and "id" in df.columns:
             out = df.repartition(num_partitions, "id")
+        if aggs:
+            # above the exchange: the result stage sees each row once
+            obs = Observation()
+            out = out.observe(obs, *aggs)
         out.write.mode("overwrite").parquet(d)
+        row = Row(**obs.get) if aggs else Row()
         files = sorted(
             f for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith("_")
         )
         meta = {
             "superstep": step,
-            "metrics": metrics,
+            "metrics": {**metrics, **row.asDict()},
             "num_partitions": num_partitions,
             "schema": df.schema.jsonValue(),
             "files": files,
         }
         tmp = os.path.join(d, "_META.json.tmp")
         with open(tmp, "w") as f:
-            json.dump(meta, f)
+            # default=str: decimal aggregates (exact hash sums) as text
+            json.dump(meta, f, default=str)
         os.rename(tmp, os.path.join(d, "_META.json"))
-        return self.load(name, step, num_partitions)
+        return self._read(d, df.schema, num_partitions), row
 
     def load(self, name: str, step: int, num_partitions: int | None = None) -> DataFrame:
-        df = self.spark.read.parquet(self._dir(name, step))
-        if num_partitions and "id" in df.columns:
+        schema = StructType.fromJson(self.metadata(name, step)["schema"])
+        return self._read(self._dir(name, step), schema, num_partitions)
+
+    def _read(self, d: str, schema: StructType, num_partitions: int | None):
+        # the recorded schema spares Spark its footer-inference job
+        df = self.spark.read.schema(schema).parquet(d)
+        if num_partitions and "id" in schema.fieldNames():
             df = df.repartition(num_partitions, "id")
         return df
 

@@ -23,16 +23,21 @@ Physical mapping (SURVEY.md §2.1, §4):
 - ``vertex_map``     — a column expression over the state DataFrame.
 - ``vertex_filter``  — ``state.filter(pred)``  (``ligra.h:410-459``;
   Spark's filter is already pbbs::pack).
-- ``IterState``      — persists each superstep's state DataFrame,
-  unpersists the previous one, and truncates lineage every
-  ``checkpoint_every`` supersteps via localCheckpoint (or a durable
-  CheckpointManager — see ligra_spark.checkpoint).  The reference has
-  no analog because shared-memory arrays have no lineage; in Spark an
-  unbounded iterative plan is the #1 failure mode for 100-iteration
-  PageRank.  Default cadence is 4: the localCheckpoint disk write is
-  the dominant FIXED per-superstep cost on convergence tails (small
-  frontiers, full-state write), and cutting it 4x halved CC wall time
-  at 165M edges while plan depth stays bounded at 2^4 state refs.
+- ``IterState``      — runs each superstep as ONE Spark query that
+  materializes the new state and computes the app's convergence
+  aggregate (``advance(new, *aggs)`` → ``(df, Row)``).  In memory it
+  persists the new state (or localCheckpoints it every
+  ``checkpoint_every`` supersteps), runs ``agg(*aggs).first()``, and
+  only then unpersists the previous state.  With a durable
+  CheckpointManager (see ligra_spark.checkpoint) the parquet write IS
+  that query: the aggregates are observed on the write, and the next
+  superstep reads the written files.  The reference has no analog
+  because shared-memory arrays have no lineage; in Spark an unbounded
+  iterative plan is the #1 failure mode for 100-iteration PageRank.
+  Default cadence is 4: the localCheckpoint disk write is the dominant
+  FIXED per-superstep cost on convergence tails (small frontiers,
+  full-state write), and cutting it 4x halved CC wall time at 165M
+  edges while plan depth stays bounded at 2^4 state refs.
 """
 
 from __future__ import annotations
@@ -315,6 +320,11 @@ def vertex_filter(state: DataFrame, pred: Column) -> DataFrame:
     return state.filter(pred)
 
 
+def _count_row() -> tuple[Column, ...]:
+    # advance's aggregate when the caller names none: the row count
+    return (F.count(F.lit(1)).alias("count"),)
+
+
 @dataclass
 class IterState:
     """Superstep state manager: persistence + lineage truncation.
@@ -323,7 +333,7 @@ class IterState:
         st = IterState(initial_df, num_partitions=g.num_partitions)
         while ...:
             new = <plan over st.df>
-            st.advance(new)            # persists new, unpersists old
+            new, (fsize,) = st.advance(new, F.count_if("in_frontier"))
         result = st.df
     """
 
@@ -347,48 +357,57 @@ class IterState:
         self._overlay_steps = 0
         self._retired: list[DataFrame] = []
 
-    def advance(self, new_df: DataFrame, action=None, metrics: dict | None = None):
-        """Persist the next superstep's state, run ``action(new_df)``
-        (the materializing job — e.g. the convergence agg or frontier
-        count), and only THEN drop the previous superstep's cache.
+    def advance(self, new_df: DataFrame, *aggs: Column, metrics: dict | None = None):
+        """Materialize the next superstep's state and compute ``aggs``
+        (single-row aggregate Columns — the convergence sum or next
+        frontier size, e.g. ``F.count_if("changed")``) over it in ONE
+        Spark query, and only THEN drop the previous superstep's cache.
+        With no ``aggs`` the Row holds the row count.
 
         Ordering is load-bearing: the new state's plan references the
         old cached state; unpersisting before materialization would
         recompute the entire superstep chain from the source — a
         quadratic blowup over 100 supersteps.
 
-        Returns (new_df, action_result).
+        With a checkpoint manager the query is the durable parquet
+        write (``CheckpointManager.save`` observes ``aggs`` on it and
+        records them with ``metrics`` in the step's ``_META.json``);
+        the returned state is rooted at the written files, so the next
+        superstep reads them instead of a second, cached copy.
+
+        Returns (new_df, Row of the aggregates).
         """
         self.superstep += 1
+        aggs = aggs or _count_row()
         old = self.df
         if self.manager is not None:
             # durable parquet checkpoint: truncates lineage AND makes the
-            # run resumable (north rule).  The manager returns the
-            # re-read DataFrame so downstream plans root at the file.
-            new_df = self.manager.save(
+            # run resumable (north rule)
+            new_df, row = self.manager.save(
                 new_df, self.name, self.superstep, metrics or {},
-                num_partitions=self.num_partitions,
-            ).persist(self.storage_level)
-        elif self.superstep % self.checkpoint_every == 0:
-            # eager localCheckpoint: materializes AND cuts the LOGICAL
-            # plan.  Without the cut, each superstep's plan embeds the
-            # previous one twice (frontier side + state side of the
-            # join) — exponential plan growth that OOMs the analyzer
-            # around superstep ~30 even though execution reads caches.
-            # lazy: the checkpoint materializes inside the action's job
-            # below — one job per superstep instead of two
-            new_df = new_df.localCheckpoint(eager=False)
+                num_partitions=self.num_partitions, aggs=aggs,
+            )
         else:
-            new_df = new_df.persist(self.storage_level)
-        # materialize the new state while the old cache is still live
-        result = action(new_df) if action is not None else new_df.count()
+            if self.superstep % self.checkpoint_every == 0:
+                # eager localCheckpoint: materializes AND cuts the LOGICAL
+                # plan.  Without the cut, each superstep's plan embeds the
+                # previous one twice (frontier side + state side of the
+                # join) — exponential plan growth that OOMs the analyzer
+                # around superstep ~30 even though execution reads caches.
+                # lazy: the checkpoint materializes inside the agg's job
+                # below — one job per superstep instead of two
+                new_df = new_df.localCheckpoint(eager=False)
+            else:
+                new_df = new_df.persist(self.storage_level)
+            # materialize the new state while the old cache is still live
+            row = new_df.agg(*aggs).first()
         self.df = new_df
         old.unpersist()
         self._drop_sparse_caches()
-        return new_df, result
+        return new_df, row
 
     # ---------------------------------------------------------- sparse tail
-    def advance_sparse(self, changes_df: DataFrame, action=None):
+    def advance_sparse(self, changes_df: DataFrame, *aggs: Column):
         """Advance by CHANGED ROWS ONLY (frontier-delta state).
 
         On a convergence tail the frontier is tiny but ``advance``
@@ -403,9 +422,9 @@ class IterState:
         mutate in place); this is the Spark-native equivalent of
         writing only the dirty cache lines.
 
-        Returns (state_view_df, action_result) — action runs on the
-        materialized ``changes_df`` (e.g. ``.count()`` for the next
-        frontier size).
+        Returns (state_view_df, Row) — ``aggs`` are computed over the
+        materialized ``changes_df`` (no ``aggs``: its row count, the
+        next frontier size).
         """
         self.superstep += 1
         if self._base is None:
@@ -417,7 +436,7 @@ class IterState:
         # checkpoint truncates the plan AND only writes the changed
         # rows — which is the whole point of the sparse tail.
         changes_df = changes_df.localCheckpoint(eager=False)
-        result = action(changes_df) if action is not None else changes_df.count()
+        result = changes_df.agg(*(aggs or _count_row())).first()
         if self._overlay is None:
             new_overlay = changes_df
         else:

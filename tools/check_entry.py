@@ -8,6 +8,7 @@ Usage: python tools/check_entry.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -62,7 +63,11 @@ def main():
     import __spark_entry__ as entry
     from ligra_spark.session import get_spark
 
-    spark = get_spark("check_entry", cpus=8, shuffle_partitions=8)
+    # one session runs every entry: local[default_parallelism()] and a
+    # 4 GB driver heap unless SPARK_GRAFT_DRIVER_MEM says otherwise (the
+    # 8 GB session default outgrew the machine over a few dozen entries)
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+    spark = get_spark("check_entry")
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events documents embeddings"
