@@ -184,36 +184,6 @@ def _q_components(spark, sf):
     return labels
 
 
-def _q_pagerank_csr(spark, sf):
-    """PageRank over the per-partition-CSR physical backend
-    (``csr_backend.make_csr_edge_map``): same app code and convergence
-    rule as ``pagerank``, different gather-scatter physics — sharing
-    its oracle IS the cross-backend check."""
-    import tempfile
-
-    from ligra_spark.apps import pagerank
-    from ligra_spark.csr_backend import make_csr_edge_map, pack_csr
-
-    g = _graph(spark, sf)
-    pack = pack_csr(g, tempfile.mkdtemp(prefix="csr_entry_pr_"))
-    scores, _ = pagerank(g, max_iters=100, edge_map_fn=make_csr_edge_map(pack))
-    return scores.select("id", F.round("rank", 8).alias("rank"))
-
-
-def _q_components_csr(spark, sf):
-    """Min-label components over the per-partition-CSR backend — exact
-    labels, shares the ``components`` oracle."""
-    import tempfile
-
-    from ligra_spark.apps import components
-    from ligra_spark.csr_backend import make_csr_edge_map, pack_csr
-
-    g = _graph(spark, sf, symmetric=True)
-    pack = pack_csr(g, tempfile.mkdtemp(prefix="csr_entry_cc_"))
-    labels, _ = components(g, edge_map_fn=make_csr_edge_map(pack))
-    return labels
-
-
 def _q_cc_star(spark, sf):
     """Two-phase (large-star/small-star) CC — diameter-independent
     round count; fixpoint labeling identical to min-label components,
@@ -304,21 +274,6 @@ def _q_sssp_full(spark, sf):
 
     g = LinkGraph.from_edges(spark, _edges_w(spark, sf), n=V)
     dists, _ = bellman_ford(g, root=0)
-    return dists
-
-
-def _q_sssp_csr(spark, sf):
-    """Bellman-Ford over the weighted CSR backend (min_plus monoid,
-    packed per-edge weights) — exact dists, shares the sssp oracle."""
-    import tempfile
-
-    from ligra_spark.apps import bellman_ford
-    from ligra_spark.csr_backend import make_csr_edge_map, pack_csr
-    from ligra_spark.graph import LinkGraph
-
-    g = LinkGraph.from_edges(spark, _edges_w(spark, sf), n=V)
-    pack = pack_csr(g, tempfile.mkdtemp(prefix="csr_entry_sssp_"))
-    dists, _ = bellman_ford(g, root=0, edge_map_fn=make_csr_edge_map(pack))
     return dists
 
 
@@ -2266,12 +2221,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ppr_sweep": _q_ppr_sweep,
         "bfscc": _q_bfscc,
         "cycle4_count": _q_cycle4_count,
-        # per-partition-CSR physical backend twins — same apps, same
-        # oracles as pagerank/components/sssp (pagerank_csr r03-green;
-        # the other two promoted round 4)
-        "pagerank_csr": _q_pagerank_csr,
-        "sssp_csr": _q_sssp_csr,
-        "components_csr": _q_components_csr,
         # PageRankDelta: r02-green fixed unroll, promoted back for an
         # r04 row with the unrolled-CTE value oracle (verdict item 4)
         "pagerank_delta": _q_pagerank_delta,
@@ -4863,7 +4812,6 @@ def _oracle_sql_sf001() -> dict[str, str]:
     oracles unchanged)."""
     return {
         "pagerank": _pr_sql(62),
-        "pagerank_csr": _pr_sql(62),
         "pagerank_delta": _prdelta_sql(10),
         "bc": _bc_sql(8),
         "hyper_bc": _hyper_bc_sql(4, past_end=True),
@@ -5173,9 +5121,4 @@ def _oracle_sql_gate() -> dict[str, str]:
         # edge set: sorted-unique, self-loops dropped
         "compressed_graph": f"WITH e AS ({EDGES_SQL}) "
         "SELECT DISTINCT src, dst FROM e WHERE src <> dst",
-        # CSR-backend twins share the join-engine oracles: matching
-        # them IS the cross-backend equality check
-        "pagerank_csr": _pr_sql(12),
-        "components_csr": _cc_sql(12, label_col="component"),
-        "sssp_csr": _sssp_sql(18),
     }

@@ -83,21 +83,6 @@ def main(argv=None):
         help="bucket count for --save-bucketed-table (default: the "
         "graph's partition count)",
     )
-    ap.add_argument(
-        "--backend", choices=("join", "csr"), default="join",
-        help="physical edgeMap backend for pagerank/components/"
-        "label_propagation/bellman_ford: 'csr' packs the adjacency into "
-        "per-partition CSR arrays (csr_backend; semantically pinned to "
-        "the join engine, throughput parity for CC — "
-        "CSR_REPEAT_r03*.json) and runs the grouped-pandas kernel with "
-        "the sparse join fallback",
-    )
-    ap.add_argument(
-        "--csr-pack-dir", default=None,
-        help="where --backend csr stores/reuses the pack (shared storage "
-        "on a cluster; reused if a manifest already exists there; "
-        "default: <output>_csr_pack)",
-    )
     ap.add_argument("--max-iters", type=int, default=100)
     ap.add_argument("--root", type=int, default=0)
     ap.add_argument("--k", type=int, default=4, help="ktruss/kclique k")
@@ -178,23 +163,10 @@ def main(argv=None):
     t0 = time.perf_counter()
     import ligra_spark.apps as apps
 
-    em_kw = {}
-    if args.backend == "csr":
-        if args.app not in ("pagerank", "components", "label_propagation", "bellman_ford"):
-            ap.error(f"--backend csr does not cover {args.app}")
-        from ligra_spark.csr_backend import load_pack, make_csr_edge_map, pack_csr
-
-        pack_dir = args.csr_pack_dir or f"{args.output}_csr_pack"
-        if os.path.exists(os.path.join(pack_dir, "manifest.json")):
-            pack = load_pack(pack_dir)
-        else:
-            pack = pack_csr(g, pack_dir)
-        em_kw["edge_map_fn"] = make_csr_edge_map(pack)
-
     if args.app == "pagerank":
         out, iters = apps.pagerank(
             g, max_iters=args.max_iters, checkpoint_mgr=mgr, resume=args.resume,
-            on_superstep=track, **em_kw,
+            on_superstep=track,
         )
     elif args.app == "pagerank_delta":
         out, iters = apps.pagerank_delta(
@@ -202,11 +174,11 @@ def main(argv=None):
         )
     elif args.app == "components":
         out, iters = apps.components(
-            g, checkpoint_mgr=mgr, resume=args.resume, on_superstep=track, **em_kw
+            g, checkpoint_mgr=mgr, resume=args.resume, on_superstep=track
         )
     elif args.app == "label_propagation":
         out, iters = apps.label_propagation(
-            g, checkpoint_mgr=mgr, resume=args.resume, on_superstep=track, **em_kw
+            g, checkpoint_mgr=mgr, resume=args.resume, on_superstep=track
         )
     elif args.app == "triangle":
         from ligra_spark.apps.triangle import triangle_count_df
@@ -215,7 +187,7 @@ def main(argv=None):
     elif args.app == "bfs":
         out, iters = apps.bfs_levels(g, root=args.root, on_superstep=track)
     elif args.app == "bellman_ford":
-        out, iters = apps.bellman_ford(g, root=args.root, on_superstep=track, **em_kw)
+        out, iters = apps.bellman_ford(g, root=args.root, on_superstep=track)
     elif args.app == "kcore":
         out, iters = apps.kcore(g, on_superstep=track)
     elif args.app == "bc":

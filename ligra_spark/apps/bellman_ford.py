@@ -22,7 +22,6 @@ def bellman_ford(
     root: int = 0,
     max_iters: int | None = None,
     on_superstep=None,
-    edge_map_fn=edge_map,
 ) -> tuple[DataFrame, int]:
     """Returns ((id, dist) for reached vertices, rounds run).  Requires
     a ``weight`` column on graph.edges."""
@@ -37,7 +36,7 @@ def bellman_ford(
     limit = max_iters or graph.n
     while fsize > 0 and it < limit:
         it += 1
-        msgs = edge_map_fn(
+        msgs = edge_map(
             graph,
             frontier,
             message=F.col("dist") + F.col("weight"),

@@ -54,6 +54,10 @@ def components(
     graphs converge well under the threshold and never pay it.
     ``None`` disables; checkpointed runs keep pure min-label (their
     committed state encodes the min-label schedule).
+
+    ``edge_map_fn`` is a tracing seam: it must behave exactly like
+    :func:`ligra_spark.engine.edge_map` (the default), and exists so a
+    profiler can pass a timed wrapper of it (``perfbench/tracing.py``).
     """
     it = 0
     if resume and checkpoint_mgr is not None and checkpoint_mgr.latest_step(name):
@@ -167,7 +171,6 @@ def label_propagation(
     resume: bool = False,
     name: str = "label_propagation",
     on_superstep=None,
-    edge_map_fn=edge_map,
 ) -> tuple[DataFrame, int]:
     """Shortcutting label propagation: min-label edge pass from active
     vertices, then pointer-jump ``label = label[label]``
@@ -194,7 +197,7 @@ def label_propagation(
     while n_active > 0 and it < max_iters:
         it += 1
         frontier = st.df.filter("active").select("id", "label")
-        msgs = edge_map_fn(
+        msgs = edge_map(
             graph,
             frontier,
             message=F.col("label"),

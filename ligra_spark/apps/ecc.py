@@ -32,8 +32,7 @@ def _signed64(bit: int) -> int:
 
 
 def _kbfs_wave(
-    graph, starts: DataFrame, n_sources: int, on_superstep=None,
-    edge_map_fn=edge_map,
+    graph, starts: DataFrame, n_sources: int, on_superstep=None
 ) -> tuple[DataFrame, int]:
     """Run the 64-wave bitmask BFS loop from ``starts (id, init_mask)``.
     Returns ((id, mask, ecc) with ecc NULL for never-reached
@@ -55,7 +54,7 @@ def _kbfs_wave(
     while fsize > 0:
         rounds += 1
         frontier = st.df.filter("changed").select("id", "mask")
-        msgs = edge_map_fn(
+        msgs = edge_map(
             graph,
             frontier,
             message=F.col("mask"),
@@ -232,7 +231,6 @@ def ecc_kbfs(
     seed: int = 0,
     phase2_threshold: int | None = 1024,
     on_superstep=None,
-    edge_map_fn=edge_map,
 ) -> tuple[DataFrame, int]:
     """Two-phase kBFS eccentricity estimation — the eccentricity
     suite's headline algorithm (``kBFS-Ecc.C:110-290``; with
@@ -285,8 +283,7 @@ def ecc_kbfs(
     )
     src1 = chosen.join(pos, ["component", "pos"]).select("id", "component")
     n_src1 = src1.count()
-    wave1, r1 = _kbfs_wave(graph, _with_bits(src1), n_src1, on_superstep,
-                           edge_map_fn=edge_map_fn)
+    wave1, r1 = _kbfs_wave(graph, _with_bits(src1), n_src1, on_superstep)
     ecc1 = pos.join(wave1.select("id", "ecc"), "id", "left").select(
         "id",
         "component",
@@ -311,8 +308,7 @@ def ecc_kbfs(
         )
         n_src2 = src2.count()
         if n_src2 > 0:
-            wave2, r2 = _kbfs_wave(graph, _with_bits(src2), n_src2, on_superstep,
-                                   edge_map_fn=edge_map_fn)
+            wave2, r2 = _kbfs_wave(graph, _with_bits(src2), n_src2, on_superstep)
             ecc1 = ecc1.join(
                 wave2.select("id", F.col("ecc").alias("ecc2")), "id", "left"
             ).select(

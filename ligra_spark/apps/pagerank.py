@@ -46,11 +46,9 @@ def pagerank(
 ) -> tuple[DataFrame, int]:
     """Returns ((id, rank) DataFrame, supersteps run).
 
-    ``edge_map_fn`` swaps the physical gather-scatter backend — pass
-    :func:`ligra_spark.csr_backend.make_csr_edge_map`'s adapter to run
-    the superstep over per-partition CSR arrays instead of the join
-    engine; everything else (state, convergence, checkpoints, resume)
-    is shared.
+    ``edge_map_fn`` is a tracing seam: it must behave exactly like
+    :func:`ligra_spark.engine.edge_map` (the default), and exists so a
+    profiler can pass a timed wrapper of it (``perfbench/tracing.py``).
 
     ``init`` warm-starts the iteration from an (id, rank) DataFrame
     instead of the uniform 1/n vector (ids absent from ``init`` get

@@ -25,7 +25,6 @@ def radii(
     graph,
     k: int = 64,
     on_superstep=None,
-    edge_map_fn=edge_map,
 ) -> tuple[DataFrame, int]:
     """Returns ((id, radii) over all n vertices, rounds run)."""
     spark = graph.spark
@@ -64,7 +63,7 @@ def radii(
             "in_frontier",
         )
         frontier = synced.filter("in_frontier").select("id", "visited")
-        msgs = edge_map_fn(
+        msgs = edge_map(
             graph,
             frontier,
             message=F.col("visited"),

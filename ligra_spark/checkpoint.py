@@ -82,13 +82,13 @@ class CheckpointManager:
             obs = Observation()
             out = out.observe(obs, *aggs)
         out.write.mode("overwrite").parquet(d)
-        row = Row(**obs.get) if aggs else Row()
+        observed = obs.get if aggs else {}
         files = sorted(
             f for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith("_")
         )
         meta = {
             "superstep": step,
-            "metrics": {**metrics, **row.asDict()},
+            "metrics": {**metrics, **observed},
             "num_partitions": num_partitions,
             "schema": df.schema.jsonValue(),
             "files": files,
@@ -98,7 +98,7 @@ class CheckpointManager:
             # default=str: decimal aggregates (exact hash sums) as text
             json.dump(meta, f, default=str)
         os.rename(tmp, os.path.join(d, "_META.json"))
-        return self._read(d, df.schema, num_partitions), row
+        return self._read(d, df.schema, num_partitions), Row(**observed)
 
     def load(self, name: str, step: int, num_partitions: int | None = None) -> DataFrame:
         schema = StructType.fromJson(self.metadata(name, step)["schema"])

@@ -5,9 +5,9 @@ is threaded between rows, so generation is order-independent and
 reproducible shard-by-shard (the property a 10^12-row generator needs).
 
 - `edge_fixture(scale)`       — rMat link graph (F2), Ligra-exact
-  generator semantics (`ligra_spark.rmat`); `tiny` additionally has
-  `sample_graph_edges()` which parses the shipped reference fixture
-  ``/root/reference/inputs/rMatGraph_J_5_100`` (n=128, m=708) directly.
+  generator semantics (`ligra_spark.rmat`); `tiny` is
+  `sample_graph_edges()`, an rMat multigraph generated with the shape
+  of Ligra's ``rMatGraph_J_5_100`` sample (n=128, m=708, seed 5).
 - `pages_table(n, src, dst)`  — Common-Crawl-style pages (F1) with
   (url, warc_ts, html, text, lang); `text` is byte-identical to
   `extract_text_py(html)` by construction.
@@ -25,7 +25,6 @@ import datetime as _dt
 
 import numpy as np
 
-from .adjacency import csr_to_edges, read_adjacency_graph
 from .hashing import hash_int32
 from .rmat import make_symmetric, rmat_edges
 
@@ -54,10 +53,9 @@ _LANGS = ["en", "de", "fr"]
 
 
 def sample_graph_edges() -> tuple[int, np.ndarray, np.ndarray]:
-    """Parse the shipped reference sample graph (directed)."""
-    n, off, tgt, _ = read_adjacency_graph("/root/reference/inputs/rMatGraph_J_5_100")
-    src, dst = csr_to_edges(n, off, tgt)
-    return n, src, dst
+    """The tiny directed sample graph: n=128, m=708 rMat edges, seed 5
+    (duplicates and self-loops kept)."""
+    return 128, *rmat_edges(128, 708, seed=5)
 
 
 def edge_fixture(scale: str, seed: int = 1) -> tuple[int, np.ndarray, np.ndarray]:

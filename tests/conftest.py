@@ -16,7 +16,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def tiny_edges():
-    """Directed reference sample graph (n=128, m=708)."""
+    """Directed tiny sample graph (n=128, m=708 rMat, seed 5)."""
     return sample_graph_edges()
 
 

@@ -223,39 +223,10 @@ def test_trustrank_kill_resume_identical(spark, tiny_graph, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# One Spark query per durable superstep.  These build their graph in-test
-# (an rMat multigraph of the reference sample's shape, n=128, m=708), so
-# they run where the reference sample graph is absent.
+# One Spark query per durable superstep, on the tiny sample graph.
 
-_N, _M = 128, 708
+_N = 128
 _SEEDS = [0, 3, 17]
-
-
-@pytest.fixture(scope="module")
-def rmat_arrays():
-    from ligra_spark.rmat import rmat_edges
-
-    return rmat_edges(_N, _M, seed=5)
-
-
-@pytest.fixture(scope="module")
-def rmat_graph(spark, rmat_arrays):
-    from tests.conftest import edges_df
-    from ligra_spark.graph import LinkGraph
-
-    src, dst = rmat_arrays
-    return LinkGraph.from_edges(spark, edges_df(spark, src, dst), n=_N).materialize()
-
-
-@pytest.fixture(scope="module")
-def rmat_sym(spark, rmat_arrays):
-    from tests.conftest import edges_df
-    from ligra_spark.graph import LinkGraph
-    from ligra_spark.rmat import make_symmetric
-
-    s, d = make_symmetric(*rmat_arrays)
-    g = LinkGraph.from_edges(spark, edges_df(spark, s, d), n=_N, symmetric=True)
-    return g.materialize(), s, d
 
 
 def _trustrank_oracle(src, dst, iters, damping=0.85):
@@ -276,7 +247,7 @@ def _by_id(df, col):
 
 @pytest.mark.parametrize("app", ["pagerank", "trustrank", "components"])
 def test_durable_kill_resume_matches_clean_and_oracle(
-    spark, rmat_arrays, rmat_graph, rmat_sym, tmp_path, app
+    spark, tiny_edges, tiny_sym, tiny_graph, tiny_graph_sym, tmp_path, app
 ):
     """Kill a durable run after superstep 2, resume from its checkpoint:
     the result equals an uninterrupted in-memory run and the numpy
@@ -285,17 +256,18 @@ def test_durable_kill_resume_matches_clean_and_oracle(
     from ligra_spark.apps import components, pagerank, trustrank
     from ligra_spark.checkpoint import CheckpointManager
 
-    src, dst = rmat_arrays
+    _, src, dst = tiny_edges
     if app == "pagerank":
-        col, g = "rank", rmat_graph
+        col, g = "rank", tiny_graph
         run = lambda **kw: pagerank(g, max_iters=10, epsilon=0, **kw)  # noqa: E731
         want, want_iters = oracle.pagerank(_N, src, dst, max_iters=10, epsilon=0)[0], 10
     elif app == "trustrank":
-        col, g = "trust", rmat_graph
+        col, g = "trust", tiny_graph
         run = lambda **kw: trustrank(g, _SEEDS, max_iters=10, epsilon=0, **kw)  # noqa: E731
         want, want_iters = _trustrank_oracle(src, dst, 10), 10
     else:
-        col, (g, s, d) = "component", rmat_sym
+        col, g = "component", tiny_graph_sym
+        _, s, d = tiny_sym
         run = lambda **kw: components(g, **kw)  # noqa: E731
         want, want_iters = oracle.components(_N, s, d), None
 
@@ -318,7 +290,7 @@ def test_durable_kill_resume_matches_clean_and_oracle(
     np.testing.assert_allclose(got_resumed, want, rtol=1e-9, atol=0)
 
 
-def test_meta_l1_is_the_saved_steps_own(spark, rmat_graph, tmp_path):
+def test_meta_l1_is_the_saved_steps_own(spark, tiny_graph, tmp_path):
     """Every durable PageRank step's ``_META.json`` records that step's
     own L1, equal to Σ|rank − old| recomputed from its parquet."""
     from ligra_spark.apps import pagerank
@@ -326,7 +298,7 @@ def test_meta_l1_is_the_saved_steps_own(spark, rmat_graph, tmp_path):
 
     mgr = CheckpointManager(spark, str(tmp_path / "ckpt"))
     seen = {}
-    pagerank(rmat_graph, max_iters=4, epsilon=0, checkpoint_mgr=mgr,
+    pagerank(tiny_graph, max_iters=4, epsilon=0, checkpoint_mgr=mgr,
              on_superstep=lambda it, info: seen.update({it: info["l1"]}))
     assert mgr.steps("pagerank") == [1, 2, 3, 4]
     for step in mgr.steps("pagerank"):
@@ -380,7 +352,7 @@ def test_durable_and_memory_advance_return_identical_aggregates(spark, tmp_path)
     assert meta["metrics"]["count_if(even)"] == 100
 
 
-def test_durable_superstep_runs_one_query(spark, rmat_graph, tmp_path):
+def test_durable_superstep_runs_one_query(spark, tiny_graph, tmp_path):
     """Pin the Spark jobs of a durable PageRank superstep: the parquet
     write with its shuffle stages, and nothing else — a re-read that
     infers the schema, a cache fill or a separate aggregate job each
@@ -398,7 +370,7 @@ def test_durable_superstep_runs_one_query(spark, rmat_graph, tmp_path):
 
     try:
         next_group(0, None)
-        pagerank(rmat_graph, max_iters=6, epsilon=0, checkpoint_mgr=mgr,
+        pagerank(tiny_graph, max_iters=6, epsilon=0, checkpoint_mgr=mgr,
                  on_superstep=next_group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -130,24 +130,21 @@ def _first_join_left_hint(df) -> str:
     return left.hints().toString() if left.nodeName() == "ResolvedHint" else ""
 
 
-def test_edge_map_forced_branches_match_oracle(spark):
+def test_edge_map_forced_branches_match_oracle(spark, tiny_edges, tiny_graph):
     """edge_map and edge_map_multi under each branch of the one
     frontier ⋈ edges join — sparse (frontier_size=1), dense
     (frontier_size=None) and salted dense (salt_buckets=4) — return
     identical rows, equal to a numpy oracle, for a plain and a
-    seed-grouped (batched multi-instance) frontier.  The graph is a
-    tiny rMat multigraph of the reference sample's shape (n=128,
-    m=708)."""
+    seed-grouped (batched multi-instance) frontier, on the tiny sample
+    graph."""
     from collections import defaultdict
 
     from conftest import edges_df
     from ligra_spark.engine import edge_map, edge_map_multi
     from ligra_spark.graph import LinkGraph
-    from ligra_spark.rmat import rmat_edges
 
-    n = 128
-    src, dst = rmat_edges(n, 708, seed=5)
-    plain = LinkGraph.from_edges(spark, edges_df(spark, src, dst), n=n).materialize()
+    n, src, dst = tiny_edges
+    plain = tiny_graph
     salted = LinkGraph.from_edges(
         spark, edges_df(spark, src, dst), n=n, salt_buckets=4
     ).materialize()

@@ -1,6 +1,6 @@
 """ACL push-PPR + sweep cut vs a direct numpy transcription of
 ``apps/localAlg/ACL-Sync-Local.C:79-128`` / ``sweep.h:66-110`` on the
-shipped 128-vertex symmetric sample graph."""
+generated 128-vertex symmetric sample graph."""
 
 import numpy as np
 import pytest
@@ -87,11 +87,13 @@ def test_ppr_sweep_matches_reference_transcription(spark, tiny_graph_sym, tiny_s
 
     n, src, dst = tiny_sym
     m = len(src)
-    seeds = [0, 5, 17]
+    isolated = np.flatnonzero(np.bincount(src, minlength=n) == 0)
+    assert isolated.size, "the sample graph has a degree-0 vertex"
+    seeds = [0, int(isolated[0]), 17]
     state, _ = ppr(tiny_graph_sym, seeds, alpha=0.15, epsilon=1e-6)
     out = {r["seed"]: r for r in ppr_sweep(tiny_graph_sym, state).collect()}
-    # seed 5 is degree-0 in the symmetric sample graph: rejected at
-    # start (ACL-Sync-Local.C:85-88), so it has no sweep row either
+    # the degree-0 seed is rejected at start (ACL-Sync-Local.C:85-88),
+    # so it has no sweep row either
     assert set(out) == {0, 17}
     for s in sorted(out):
         p, _, _, deg = _numpy_acl(n, src, dst, s, 0.15, 1e-6)

@@ -1,16 +1,32 @@
-"""Ligra-format import/export round-trip tests against the shipped
-reference sample graph."""
+"""Ligra-format import/export round-trip tests on the tiny sample
+graph, written in Ligra's (Weighted)AdjacencyGraph text format."""
 
 import numpy as np
 
 
-def test_read_adjacency_graph_df(spark, tiny_edges):
+def _write_adjacency_text(path, n, src, dst, weights=None):
+    """Ligra's (Weighted)AdjacencyGraph text: header, n, m, n offsets,
+    m targets[, m weights], one value per line, edges in (src, dst)
+    order.  Returns the written lines."""
+    order = np.lexsort((dst, src))
+    offsets = np.searchsorted(src[order], np.arange(n))
+    body = [n, len(src), *offsets.tolist(), *dst[order].tolist()]
+    if weights is not None:
+        body += weights[order].tolist()
+    head = "WeightedAdjacencyGraph" if weights is not None else "AdjacencyGraph"
+    lines = [head, *map(str, body)]
+    with open(path, "w") as f:
+        f.write("\n".join(lines) + "\n")
+    return lines
+
+
+def test_read_adjacency_graph_df(spark, tiny_edges, tmp_path):
     from ligra_spark.sources import read_adjacency_graph_df
 
     n, src, dst = tiny_edges
-    df, n2 = read_adjacency_graph_df(
-        spark, "/root/reference/inputs/rMatGraph_J_5_100"
-    )
+    path = str(tmp_path / "g.adj")
+    _write_adjacency_text(path, n, src, dst)
+    df, n2 = read_adjacency_graph_df(spark, path)
     assert n2 == n == 128
     got = df.toPandas().sort_values(["src", "dst"]).reset_index(drop=True)
     order = np.lexsort((dst, src))
@@ -18,28 +34,32 @@ def test_read_adjacency_graph_df(spark, tiny_edges):
     np.testing.assert_array_equal(got["dst"].to_numpy(), dst[order])
 
 
-def test_weighted_adjacency_graph(spark):
+def test_weighted_adjacency_graph(spark, tiny_edges, tmp_path):
     from ligra_spark.sources import read_adjacency_graph_df
 
-    df, n = read_adjacency_graph_df(
-        spark, "/root/reference/inputs/rMatGraph_WJ_5_100"
-    )
-    assert "weight" in df.columns and n == 128
-    assert df.count() == 708
+    n, src, dst = tiny_edges
+    weights = 1 + (src * 7 + dst) % 7  # in [1, log2(n)], as adjGraphAddWeights
+    path = str(tmp_path / "g.wadj")
+    _write_adjacency_text(path, n, src, dst, weights)
+    df, n2 = read_adjacency_graph_df(spark, path)
+    assert "weight" in df.columns and n2 == n == 128
+    assert df.count() == len(src) == 708
+    got = sorted(map(tuple, df.select("src", "dst", "weight").collect()))
+    assert got == sorted(zip(src.tolist(), dst.tolist(), weights.tolist()))
 
 
 def test_roundtrip_text(spark, tiny_edges, tmp_path):
     from ligra_spark.sources import read_adjacency_graph_df, write_adjacency_graph
 
-    df, n = read_adjacency_graph_df(
-        spark, "/root/reference/inputs/rMatGraph_J_5_100"
-    )
+    n, src, dst = tiny_edges
+    path = str(tmp_path / "in.adj")
+    theirs = _write_adjacency_text(path, n, src, dst)
+    df, n2 = read_adjacency_graph_df(spark, path)
     out = str(tmp_path / "g.adj")
-    write_adjacency_graph(df, n, out)
-    with open(out) as f, open("/root/reference/inputs/rMatGraph_J_5_100") as ref:
+    write_adjacency_graph(df, n2, out)
+    with open(out) as f:
         ours = [l.strip() for l in f if l.strip()]
-        theirs = [l.strip() for l in ref if l.strip()]
-    assert ours == theirs, "byte-level round-trip with the reference fixture"
+    assert ours == theirs, "line-level round trip of the AdjacencyGraph text"
 
 
 def test_binary_csr_roundtrip(spark, tiny_edges, tmp_path):

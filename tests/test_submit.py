@@ -178,20 +178,18 @@ def test_spark_submit_bucketed_table_pagerank(spark, tiny_graph, tmp_path):
     )
 
 
-def test_spark_submit_csr_backend_components(spark, tiny_graph_sym, tmp_path):
-    """--backend csr through real spark-submit: the grouped-pandas CSR
-    kernel (a closure over csr_backend, resolved in executor Python
-    workers ONLY via --py-files) packs and runs components; labels must
-    equal the in-process join-engine run exactly, and the pack manifest
-    must be committed where --csr-pack-dir points."""
+def test_spark_submit_ecc_fm_executor_imports(spark, tiny_graph_sym, tmp_path):
+    """ecc_fm through real spark-submit: its init masks come from a
+    pandas UDF that calls ``ligra_spark.hashing`` inside executor Python
+    workers, which can resolve the package ONLY via --py-files.  The
+    eccentricities must equal the in-process run exactly."""
     zpath = _build_zip(str(tmp_path))
     job = str(tmp_path / "run_app.py")
     shutil.copyfile(os.path.join(REPO, "jobs", "run_app.py"), job)
 
     edges = str(tmp_path / "edges_sym.parquet")
     tiny_graph_sym.edges.select("src", "dst").write.mode("overwrite").parquet(edges)
-    out = str(tmp_path / "labels.parquet")
-    pack_dir = str(tmp_path / "pack")
+    out = str(tmp_path / "ecc.parquet")
 
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)
@@ -205,11 +203,9 @@ def test_spark_submit_csr_backend_components(spark, tiny_graph_sym, tmp_path):
             "--conf", "spark.ui.enabled=false",
             "--py-files", zpath,
             job,
-            "--app", "components",
+            "--app", "ecc_fm",
             "--edges", edges,
             "--n", str(tiny_graph_sym.n),
-            "--backend", "csr",
-            "--csr-pack-dir", pack_dir,
             "--output", out,
         ],
         cwd=str(tmp_path),
@@ -219,11 +215,10 @@ def test_spark_submit_csr_backend_components(spark, tiny_graph_sym, tmp_path):
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
-    assert os.path.exists(os.path.join(pack_dir, "manifest.json"))
 
-    from ligra_spark.apps import components
+    from ligra_spark.apps import ecc_fm
 
-    expected, _ = components(tiny_graph_sym)
-    exp = sorted((r["id"], r["component"]) for r in expected.collect())
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
+    expected, _ = ecc_fm(tiny_graph_sym)
+    exp = sorted((r["id"], r["ecc"]) for r in expected.collect())
+    got = sorted(map(tuple, spark.read.parquet(out).select("id", "ecc").collect()))
     assert got == exp
