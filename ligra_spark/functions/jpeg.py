@@ -1,35 +1,41 @@
-"""Pure-numpy baseline JPEG (JFIF) codec — the native decode path for
-the one compressed format a real crawl is dominated by.
+"""Pure-numpy JPEG (JFIF) codec — the native decode path for the one
+compressed format a real crawl is dominated by.
 
-Decoder (``decode_jpeg``): baseline sequential DCT (SOF0) AND
-progressive DCT (SOF2) per ITU-T T.81 — marker walk (APPn/COM
-skipped), DQT (8/16-bit tables), DHT (canonical-code Huffman tables,
+Decoder (``decode_jpeg``): sequential (SOF0/SOF1) and progressive
+(SOF2) DCT frames per ITU-T T.81, 8-bit, Huffman-coded — marker walk
+(APPn/COM skipped), DQT (8/16-bit tables), DHT (canonical prefix codes
 built FROM THE STREAM — nothing about the file's tables is assumed),
-SOF0/SOF2, DRI, SOS, restart markers with DC-predictor reset,
-byte-stuffing (0xFF00) removal, per-MCU entropy decode (DC diff
-categories + AC run/size with ZRL/EOB), dequantize, de-zigzag, float
+SOF, DRI, SOS, restart markers with DC-predictor reset, byte-stuffing
+(0xFF00) removal.  Every scan runs through one walker into per-
+component int32 zig-zag coefficient planes: a scan with several
+components walks MCUs, a single-component scan walks that component's
+own block grid (A.2.2).  A sequential scan is the full-band case of the
+Annex-G coding (Ss=0, Se=63, Ah=Al=0: DC difference, then AC run/size
+with ZRL/EOB over 1..63), so a sequential frame may arrive as one
+interleaved scan or as one scan per component.  Progressive scans add
+spectral selection (Ss..Se bands, EOBn run codes) and successive
+approximation (Ah/Al first and refinement passes, G.1.2.2-3).  Once
+the frame ends it is reconstructed once: dequantize, de-zigzag, float
 IDCT (precomputed orthonormal 8x8 basis, one einsum per component),
 level shift, chroma upsample (nearest / pixel replication — the spec
 leaves the interpolation filter free), YCbCr→RGB (JFIF full-range
-constants), clamp.  Progressive streams (T.81 Annex G) accumulate
-quantized coefficients across scans — spectral selection (Ss..Se
-bands, single-component AC scans with EOBn run coding) and successive
-approximation (Ah/Al bit-plane first/refinement passes, G.1.2.2-3) —
-and reconstruct once at EOI.  Output is always (H, W, 3) uint8;
-grayscale replicates the luma plane.  Arithmetic coding, hierarchical
-(SOF5-7/13-15) and 12-bit precision raise ``NotImplementedError`` —
-scoped boundaries, not stubs.
+constants), clamp.  Output is always (H, W, 3) uint8; grayscale
+replicates the luma plane.  Arithmetic coding, lossless and
+hierarchical frames (SOF3, SOF5-7, SOF9-15) and 12-bit precision raise
+``NotImplementedError`` — scoped boundaries, not stubs.
 
-Encoder (``encode_jpeg_baseline``): the fixture/test twin — FDCT +
-quantization + Annex-K Huffman tables (shipped in the file's own
-DQT/DHT segments, so the decoder never depends on the transcription),
-grayscale or 4:4:4 YCbCr.  Deliberately minimal: no subsampled
-encoding, no restarts.  Its one load-bearing property, pinned by
-tests: an image whose every 8x8 block is UNIFORM encodes to DC-only
-blocks, and with a DC quantizer that divides 8·(v−128) exactly the
-decode round-trips BIT-EXACTLY — which is what lets the driver's
-DuckDB oracle recompute decoded-JPEG features from sha256 digests
-without owning a codec.
+Encoders (``encode_jpeg_baseline``, ``encode_jpeg_progressive``): the
+fixture/test twins — FDCT + quantization + Annex-K Huffman tables
+(shipped in the file's own DQT/DHT segments, so the decoder never
+depends on the transcription), grayscale, 4:4:4 or 4:2:0 YCbCr, with
+optional restarts for baseline.  Both write the same headers and the
+same quantized coefficients; they differ only in the SOF marker, the
+AC tables, DRI and the scan bodies.  Their one load-bearing property,
+pinned by tests: an image whose every 8x8 block is UNIFORM encodes to
+DC-only blocks, and with a DC quantizer that divides 8·(v−128) exactly
+the decode round-trips BIT-EXACTLY — which is what lets the DuckDB
+oracle recompute decoded-JPEG features from sha256 digests without
+owning a codec.
 
 No reference parity to cite: rwang067/ligra has no media layer at all
 — this extends the engine toward the training-data-pipeline brief.
@@ -38,6 +44,8 @@ No reference parity to cite: rwang067/ligra has no media layer at all
 from __future__ import annotations
 
 import numpy as np
+
+from .prefix_code import canonical_code, decode_symbol
 
 __all__ = ["decode_jpeg", "encode_jpeg_baseline", "encode_jpeg_progressive"]
 
@@ -62,23 +70,13 @@ for _u in range(8):
         _A[_u, _x] = 0.5 * _c * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 
 
-def _build_huffman(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """Canonical Huffman table per T.81 Annex C: ``bits[l]`` codes of
-    length l+1, symbols assigned in ``vals`` order with codes counting
-    up and left-shifting at each length step.  Returns
-    {(length, code): symbol}."""
-    table: dict[tuple[int, int], int] = {}
-    if sum(bits) > len(vals):
+def _huffman_code(bits, vals) -> dict[tuple[int, int], int]:
+    """T.81 Annex C: ``bits[l]`` codes of length l+1, assigned to the
+    symbols in ``vals`` order.  Returns {(length, code): symbol}."""
+    if len(bits) < 16 or sum(bits) > len(vals):
         raise ValueError("truncated JPEG Huffman table")
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
+    lengths = [ln for ln in range(1, 17) for _ in range(bits[ln - 1])]
+    return canonical_code(list(zip(lengths, vals)))
 
 
 class _BitReader:
@@ -128,15 +126,6 @@ class _BitReader:
             v = (v << 1) | self.read_bit()
         return v
 
-    def decode_symbol(self, table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in JPEG stream")
-
     def byte_align_and_expect_rst(self, n: int) -> None:
         """Drop partial bits, consume the RSTn marker the stuffing
         scanner parked on (restart intervals byte-align, T.81 E.2.4)."""
@@ -170,19 +159,20 @@ def _extend(v: int, t: int) -> int:
 
 
 def decode_jpeg(buf: bytes) -> np.ndarray:
-    """Baseline-sequential JFIF decode → (H, W, 3) uint8 (grayscale
-    replicated).  See module docstring for scope."""
+    """JFIF decode of a sequential (SOF0/SOF1) or progressive (SOF2)
+    frame → (H, W, 3) uint8 (grayscale replicated).  A scan may carry
+    any subset of the frame's components.  See module docstring for
+    scope."""
     if buf[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
     pos = 2
     qt: dict[int, np.ndarray] = {}
     huff_dc: dict[int, dict] = {}
     huff_ac: dict[int, dict] = {}
-    frame = None  # (h, w, comps) from SOF0/SOF2
+    frame = None  # (h, w, comps) from SOF0/SOF1/SOF2
     progressive = False
     coefs: list[np.ndarray] | None = None  # per-comp (N, 64) zigzag int32
     restart_interval = 0
-    rgb: np.ndarray | None = None
     while pos + 2 <= len(buf):
         if buf[pos] != 0xFF:
             raise ValueError("bad JPEG marker sync")
@@ -221,28 +211,27 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
             i = 0
             while i < len(body):
                 tc, th = body[i] >> 4, body[i] & 0x0F
-                i += 1
-                bits = list(body[i : i + 16])
-                i += 16
+                bits = body[i + 1 : i + 17]
                 n = sum(bits)
-                vals = list(body[i : i + n])
-                i += n
-                (huff_dc if tc == 0 else huff_ac)[th] = _build_huffman(bits, vals)
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 progressive
-            prec = body[0]
-            if prec != 8:
-                raise NotImplementedError(f"{prec}-bit JPEG is not supported")
+                vals = body[i + 17 : i + 17 + n]
+                i += 17 + n
+                (huff_dc if tc == 0 else huff_ac)[th] = _huffman_code(bits, vals)
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 progressive
+            if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+                raise ValueError("truncated JPEG SOF header")
+            if body[0] != 8:
+                raise NotImplementedError(f"{body[0]}-bit JPEG is not supported")
             progressive = marker == 0xC2
             h = int.from_bytes(body[1:3], "big")
             w = int.from_bytes(body[3:5], "big")
-            nc = body[5]
             comps = []
-            for c in range(nc):
-                cid, hv, tq = body[6 + 3 * c], body[7 + 3 * c], body[8 + 3 * c]
-                comps.append(
-                    {"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq}
-                )
+            for c in range(body[5]):
+                cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0x0F <= 4):
+                    raise ValueError("bad JPEG sampling factor")
+                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
             frame = (h, w, comps)
+            coefs = None
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
                 "only baseline (SOF0/SOF1) and progressive (SOF2) JPEG "
@@ -253,9 +242,9 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
         elif marker == 0xDA:  # SOS — entropy-coded data follows
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
-            if len(body) < 1 or len(body) < 4 + 2 * body[0]:
+            if not body or not 1 <= body[0] <= 4 or len(body) < 4 + 2 * body[0]:
                 # ns + 2 bytes/component + Ss/Se/AhAl must all be present
-                raise ValueError("truncated JPEG SOS header")
+                raise ValueError("bad JPEG SOS header")
             ns = body[0]
             scan_tabs = {}
             scan_order = []
@@ -264,135 +253,24 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
                 scan_tabs[cs] = (tdta >> 4, tdta & 0x0F)
                 scan_order.append(cs)
             if progressive:
-                ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-                ahal = body[3 + 2 * ns]
-                if coefs is None:
-                    coefs = _alloc_coef_planes(frame)
-                pos = _decode_progressive_scan(
-                    buf, pos, frame, scan_order, scan_tabs, ss, se,
-                    ahal >> 4, ahal & 0x0F, coefs, huff_dc, huff_ac,
-                    restart_interval,
-                )
-            else:
-                rgb, pos = _decode_scan(
-                    buf, pos, frame, scan_tabs, qt, huff_dc, huff_ac,
-                    restart_interval,
-                )
+                ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
+                # a DC scan (Ss=0) carries no AC band; an AC band is
+                # single-component (G.1.1.1.1)
+                if se > 63 or (ss == 0 and se != 0) or (ss > 0 and ns != 1):
+                    raise ValueError("bad JPEG progressive scan parameters")
+            else:  # a sequential scan is always the full band (B.2.3)
+                ss, se, ahal = 0, 63, 0
+            if coefs is None:
+                coefs = _alloc_coef_planes(frame)
+            pos = _decode_scan(
+                buf, pos, frame, scan_order, scan_tabs, ss, se,
+                ahal >> 4, ahal & 0x0F, coefs, huff_dc, huff_ac,
+                restart_interval,
+            )
         # APPn / COM / others: skipped
-    if progressive and coefs is not None:
-        rgb = _finish_progressive(frame, coefs, qt)
-    if rgb is None:
+    if coefs is None:
         raise ValueError("JPEG had no decoded scan")
-    return rgb
-
-
-def _decode_scan(buf, pos, frame, scan_tabs, qt, huff_dc, huff_ac, restart_interval):
-    h, w, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    # per-component coefficient planes (in 8x8 block units)
-    planes = []
-    for c in comps:
-        bw, bh = mcux * c["h"], mcuy * c["v"]
-        planes.append(np.zeros((bh * bw, 8, 8), dtype=np.float64))
-    reader = _BitReader(buf, pos)
-    pred = [0] * len(comps)
-    # validate table references BEFORE the MCU loop: corrupt streams
-    # must fail with a clean ValueError, not a KeyError mid-decode
-    for c in comps:
-        if c["id"] not in scan_tabs:
-            raise ValueError(f"JPEG scan missing component {c['id']}")
-        td, ta = scan_tabs[c["id"]]
-        if td not in huff_dc or ta not in huff_ac or c["tq"] not in qt:
-            raise ValueError("JPEG scan references undefined DHT/DQT table")
-    rst_n = 0
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                reader.byte_align_and_expect_rst(rst_n)
-                rst_n = (rst_n + 1) % 8
-                pred = [0] * len(comps)
-            for ci, c in enumerate(comps):
-                td, ta = scan_tabs[c["id"]]
-                dct, act = huff_dc[td], huff_ac[ta]
-                q = qt[c["tq"]]
-                bw = mcux * c["h"]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        zz = np.zeros(64, dtype=np.int64)
-                        t = reader.decode_symbol(dct)
-                        diff = _extend(reader.receive(t), t)
-                        pred[ci] += diff
-                        zz[0] = pred[ci]
-                        k = 1
-                        while k < 64:
-                            rs = reader.decode_symbol(act)
-                            r, s = rs >> 4, rs & 0x0F
-                            if s == 0:
-                                if r == 15:  # ZRL: sixteen zeros
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("AC run past block end")
-                            zz[k] = _extend(reader.receive(s), s)
-                            k += 1
-                        block = np.zeros(64, dtype=np.float64)
-                        block[ZIGZAG] = zz * q  # dequant + de-zigzag
-                        bidx = (my * c["v"] + by) * bw + (mx * c["h"] + bx)
-                        planes[ci][bidx] = block.reshape(8, 8)
-            mcu_count += 1
-    rgb = _reconstruct(frame, planes, mcux, mcuy, hmax, vmax)
-    # skip to the marker the reader parked on (EOI normally)
-    end = reader.pos
-    if reader.marker is None:
-        while end + 1 < len(buf) and not (
-            buf[end] == 0xFF and buf[end + 1] != 0x00
-        ):
-            end += 1
-    return rgb, end
-
-
-def _reconstruct(frame, planes, mcux, mcuy, hmax, vmax) -> np.ndarray:
-    """Dequantized (N, 8, 8) coefficient blocks per component →
-    (H, W, 3) uint8: one vectorized IDCT einsum per component, block
-    grid reassembly, chroma upsample, color transform."""
-    h, w, comps = frame
-    out_planes = []
-    for ci, c in enumerate(comps):
-        bw, bh = mcux * c["h"], mcuy * c["v"]
-        pix = np.einsum("ux,nuv,vy->nxy", _A, planes[ci], _A) + 128.0
-        # reassemble block grid → (bh*8, bw*8) plane
-        plane = (
-            pix.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
-        )
-        # upsample to full MCU-padded resolution (nearest / replication)
-        ry, rx = vmax // c["v"], hmax // c["h"]
-        if ry > 1 or rx > 1:
-            plane = plane.repeat(ry, axis=0).repeat(rx, axis=1)
-        out_planes.append(plane[:h, :w])
-    if len(comps) == 1:
-        y = np.clip(np.round(out_planes[0]), 0, 255).astype(np.uint8)
-        return np.stack([y, y, y], axis=2)
-    if len(comps) == 3:
-        y, cb, cr = out_planes
-        cb = cb - 128.0
-        cr = cr - 128.0
-        r = y + 1.402 * cr
-        g = y - 0.344136 * cb - 0.714136 * cr
-        b = y + 1.772 * cb
-        return np.clip(
-            np.round(np.stack([r, g, b], axis=2)), 0, 255
-        ).astype(np.uint8)
-    raise NotImplementedError(f"{len(comps)}-component JPEG is not supported")
-
-
-# ---------------------------------------------------------------------------
-# progressive (SOF2) decode — T.81 Annex G
+    return _reconstruct(frame, coefs, qt)
 
 
 def _frame_geometry(frame):
@@ -406,7 +284,7 @@ def _frame_geometry(frame):
 
 def _alloc_coef_planes(frame) -> list[np.ndarray]:
     """Per-component (n_blocks, 64) int32 zigzag-order coefficient
-    accumulators on the MCU-padded block grid — scans add to these,
+    planes on the MCU-padded block grid — scans write into these,
     reconstruction happens once at EOI."""
     _, _, comps = frame
     hmax, vmax, mcux, mcuy = _frame_geometry(frame)
@@ -416,105 +294,87 @@ def _alloc_coef_planes(frame) -> list[np.ndarray]:
     ]
 
 
-def _comp_block_grid(frame, c):
-    """Non-interleaved scan geometry (T.81 A.2.2): a single-component
-    scan walks ONLY the blocks covering the component's own samples —
-    ceil(ceil(dim·samp/sampmax)/8) per axis — in raster order on the
+def _scan_blocks(frame, scomps):
+    """Block order of one scan (T.81 A.2), one list of (component
+    index, block index) per MCU.  A multi-component scan walks MCUs of
+    h×v blocks per component.  A single-component scan walks ONLY the
+    blocks covering the component's own samples — ceil(ceil(dim·samp/
+    sampmax)/8) per axis — one block per MCU, in raster order on the
     padded plane (padded row stride, so partial planes compose with
-    interleaved DC scans)."""
-    h, w, comps = frame
+    interleaved scans)."""
+    h, w, _ = frame
     hmax, vmax, mcux, mcuy = _frame_geometry(frame)
-    cw = (w * c["h"] + hmax - 1) // hmax
-    ch_ = (h * c["v"] + vmax - 1) // vmax
-    cbw = (cw + 7) // 8
-    cbh = (ch_ + 7) // 8
-    return cbw, cbh, mcux * c["h"]  # used cols, used rows, padded stride
+    if len(scomps) == 1:
+        ci, c = scomps[0]
+        cbw = ((w * c["h"] + hmax - 1) // hmax + 7) // 8
+        cbh = ((h * c["v"] + vmax - 1) // vmax + 7) // 8
+        stride = mcux * c["h"]
+        for by in range(cbh):
+            for bx in range(cbw):
+                yield [(ci, by * stride + bx)]
+        return
+    for my in range(mcuy):
+        for mx in range(mcux):
+            yield [
+                (ci, (my * c["v"] + by) * mcux * c["h"] + mx * c["h"] + bx)
+                for ci, c in scomps
+                for by in range(c["v"])
+                for bx in range(c["h"])
+            ]
 
 
-def _decode_progressive_scan(
+def _decode_scan(
     buf, pos, frame, scan_order, scan_tabs, ss, se, ah, al,
     coefs, huff_dc, huff_ac, restart_interval,
 ):
-    """One progressive scan into the coefficient accumulators.
-    Four scan kinds (G.1.2.1-3): DC first (diff<<Al), DC refinement
-    (one bit ORed at Al), AC first (band Ss..Se with EOBn run codes),
-    AC refinement (correction bits, G.1.2.3).  Returns the stream
+    """One scan into the coefficient planes.  Ss=0 codes each block's
+    DC (first pass: diff<<Al; refinement: one bit ORed at Al), followed
+    in a sequential scan (Se=63) by the block's AC band 1..63; Ss>0 is
+    a progressive AC band, first pass (EOBn run codes) or refinement
+    (correction bits) — T.81 F.1.2, G.1.2.1-3.  Returns the stream
     position after the scan's entropy data."""
-    h, w, comps = frame
-    hmax, vmax, mcux, mcuy = _frame_geometry(frame)
+    _, _, comps = frame
     byid = {c["id"]: (ci, c) for ci, c in enumerate(comps)}
     scomps = []
+    tabs = {}
     for cid in scan_order:
         if cid not in byid:
             raise ValueError(f"JPEG scan references unknown component {cid}")
-        scomps.append(byid[cid])
-    if ss == 0:
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        for ci, c in scomps:
-            td = scan_tabs[c["id"]][0]
-            if ah == 0 and td not in huff_dc:
-                raise ValueError("JPEG scan references undefined DHT table")
-    else:
-        if len(scomps) != 1:
-            raise ValueError("progressive AC scan must be single-component")
-        ta = scan_tabs[scomps[0][1]["id"]][1]
-        if ah == 0 and ta not in huff_ac:
+        ci, c = byid[cid]
+        td, ta = scan_tabs[cid]
+        # resolve tables before the walk: a corrupt stream must fail
+        # with a ValueError here, not a KeyError mid-scan
+        if (ss == 0 and ah == 0 and td not in huff_dc) or (
+            se > 0 and ta not in huff_ac
+        ):
             raise ValueError("JPEG scan references undefined DHT table")
+        scomps.append((ci, c))
+        tabs[ci] = (huff_dc.get(td), huff_ac.get(ta))
     reader = _BitReader(buf, pos)
     pred = [0] * len(comps)
     eobrun = 0
     rst_n = 0
-    mcu_count = 0
-
-    def maybe_restart():
-        nonlocal pred, eobrun, rst_n
-        if restart_interval and mcu_count and mcu_count % restart_interval == 0:
+    for mcu, blocks in enumerate(_scan_blocks(frame, scomps)):
+        if restart_interval and mcu and mcu % restart_interval == 0:
             reader.byte_align_and_expect_rst(rst_n)
             rst_n = (rst_n + 1) % 8
             pred = [0] * len(comps)
             eobrun = 0
-
-    if ss == 0 and len(scomps) > 1:
-        # interleaved DC scan: MCU walk, h*v blocks per component
-        for my in range(mcuy):
-            for mx in range(mcux):
-                maybe_restart()
-                for ci, c in scomps:
-                    bw = mcux * c["h"]
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            bidx = (my * c["v"] + by) * bw + (mx * c["h"] + bx)
-                            _dc_block(
-                                reader, coefs[ci], bidx, ah, al, pred, ci,
-                                huff_dc.get(scan_tabs[c["id"]][0]),
-                            )
-                mcu_count += 1
-    else:
-        # non-interleaved: one block per MCU over the used grid
-        ci, c = scomps[0]
-        cbw, cbh, stride = _comp_block_grid(frame, c)
-        tabs = scan_tabs[c["id"]]
-        for by in range(cbh):
-            for bx in range(cbw):
-                maybe_restart()
-                bidx = by * stride + bx
-                if ss == 0:
-                    _dc_block(
-                        reader, coefs[ci], bidx, ah, al, pred, ci,
-                        huff_dc.get(tabs[0]),
-                    )
-                elif ah == 0:
-                    eobrun = _ac_first_block(
-                        reader, coefs[ci], bidx, ss, se, al, eobrun,
-                        huff_ac.get(tabs[1]),
-                    )
-                else:
-                    eobrun = _ac_refine_block(
-                        reader, coefs[ci], bidx, ss, se, al, eobrun,
-                        huff_ac.get(tabs[1]),
-                    )
-                mcu_count += 1
+        for ci, bidx in blocks:
+            dct, act = tabs[ci]
+            coef = coefs[ci]
+            if ss == 0:
+                _dc_block(reader, coef, bidx, ah, al, pred, ci, dct)
+                if se:  # sequential: the block's AC band follows
+                    _ac_first_block(reader, coef, bidx, 1, se, 0, 0, act)
+            elif ah == 0:
+                eobrun = _ac_first_block(
+                    reader, coef, bidx, ss, se, al, eobrun, act
+                )
+            else:
+                eobrun = _ac_refine_block(
+                    reader, coef, bidx, ss, se, al, eobrun, act
+                )
     # skip to the marker terminating this scan's entropy data
     end = reader.pos
     if reader.marker is None:
@@ -527,9 +387,12 @@ def _decode_progressive_scan(
 
 def _dc_block(reader, coef, bidx, ah, al, pred, ci, dct):
     if ah == 0:  # first pass: category + diff bits, shifted to Al
-        t = reader.decode_symbol(dct)
-        diff = _extend(reader.receive(t), t)
-        pred[ci] += diff
+        t = decode_symbol(dct, reader.read_bit)
+        if t > 11:  # 8-bit DC categories end at 11 (T.81 Table F.1)
+            raise ValueError("JPEG DC category out of range")
+        pred[ci] += _extend(reader.receive(t), t)
+        if not -2048 < pred[ci] < 2048:  # past any 8-bit DC value
+            raise ValueError("JPEG DC value out of range")
         coef[bidx, 0] = pred[ci] << al
     else:  # refinement: one correction bit ORed into bit Al
         if reader.read_bit():
@@ -537,12 +400,13 @@ def _dc_block(reader, coef, bidx, ah, al, pred, ci, dct):
 
 
 def _ac_first_block(reader, coef, bidx, ss, se, al, eobrun, act):
-    """G.1.2.2: run/size with EOBn band-run codes; values land <<Al."""
+    """G.1.2.2 (and F.1.2.2 with Ss=1, Se=63, Al=0): run/size codes,
+    values land <<Al; EOBn band-run codes return the run."""
     if eobrun > 0:
         return eobrun - 1
     k = ss
     while k <= se:
-        rs = reader.decode_symbol(act)
+        rs = decode_symbol(act, reader.read_bit)
         r, s = rs >> 4, rs & 0x0F
         if s == 0:
             if r == 15:  # ZRL
@@ -552,6 +416,8 @@ def _ac_first_block(reader, coef, bidx, ss, se, al, eobrun, act):
             if r:
                 eobrun += reader.receive(r)
             break
+        if s > 10:  # 8-bit AC sizes end at 10 (T.81 Table F.2)
+            raise ValueError("JPEG AC size out of range")
         k += r
         if k > se:
             raise ValueError("AC run past spectral band end")
@@ -574,7 +440,7 @@ def _ac_refine_block(reader, coef, bidx, ss, se, al, eobrun, act):
     k = ss
     if eobrun == 0:
         while k <= se:
-            rs = reader.decode_symbol(act)
+            rs = decode_symbol(act, reader.read_bit)
             r, s = rs >> 4, rs & 0x0F
             newval = 0
             if s == 0:
@@ -608,19 +474,44 @@ def _ac_refine_block(reader, coef, bidx, ss, se, al, eobrun, act):
     return eobrun
 
 
-def _finish_progressive(frame, coefs, qt) -> np.ndarray:
-    """Dequantize the accumulated zigzag coefficients and reconstruct."""
-    _, _, comps = frame
+def _reconstruct(frame, coefs, qt) -> np.ndarray:
+    """Quantized zigzag coefficient planes → (H, W, 3) uint8:
+    dequantize and de-zigzag, one vectorized IDCT einsum per component,
+    block grid reassembly, chroma upsample, color transform."""
+    h, w, comps = frame
     hmax, vmax, mcux, mcuy = _frame_geometry(frame)
-    planes = []
+    out_planes = []
     for ci, c in enumerate(comps):
         if c["tq"] not in qt:
             raise ValueError("JPEG frame references undefined DQT table")
         deq = coefs[ci].astype(np.float64) * qt[c["tq"]][None, :]
         full = np.zeros_like(deq)
         full[:, ZIGZAG] = deq  # de-zigzag, vectorized over blocks
-        planes.append(full.reshape(-1, 8, 8))
-    return _reconstruct(frame, planes, mcux, mcuy, hmax, vmax)
+        bw, bh = mcux * c["h"], mcuy * c["v"]
+        pix = np.einsum("ux,nuv,vy->nxy", _A, full.reshape(-1, 8, 8), _A) + 128.0
+        # reassemble block grid → (bh*8, bw*8) plane
+        plane = (
+            pix.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
+        )
+        # upsample to full MCU-padded resolution (nearest / replication)
+        ry, rx = vmax // c["v"], hmax // c["h"]
+        if ry > 1 or rx > 1:
+            plane = plane.repeat(ry, axis=0).repeat(rx, axis=1)
+        out_planes.append(plane[:h, :w])
+    if len(comps) == 1:
+        y = np.clip(np.round(out_planes[0]), 0, 255).astype(np.uint8)
+        return np.stack([y, y, y], axis=2)
+    if len(comps) == 3:
+        y, cb, cr = out_planes
+        cb = cb - 128.0
+        cr = cr - 128.0
+        r = y + 1.402 * cr
+        g = y - 0.344136 * cb - 0.714136 * cr
+        b = y + 1.772 * cb
+        return np.clip(
+            np.round(np.stack([r, g, b], axis=2)), 0, 255
+        ).astype(np.uint8)
+    raise NotImplementedError(f"{len(comps)}-component JPEG is not supported")
 
 
 # ---------------------------------------------------------------------------
@@ -671,7 +562,7 @@ _AC_CHR_VALS = [
 
 def _encode_table(bits, vals) -> dict[int, tuple[int, int]]:
     """symbol → (code, length) for the encoder side."""
-    dec = _build_huffman(bits, vals)
+    dec = _huffman_code(bits, vals)
     return {sym: (code, length) for (length, code), sym in dec.items()}
 
 
@@ -739,8 +630,8 @@ def _encode_block(wr, zz, pred, dc_tab, ac_tab):
 
 def _prepare_encode_planes(img, quant, grayscale, sampling):
     """Shared front half of both encoders: RGB→YCbCr, chroma
-    downsample, quant-table normalization.  Returns
-    (planes, samps, q, h, w)."""
+    downsample, quant-table normalization.  Returns (planes, frame, q)
+    with ``frame`` shaped like the decoder's (h, w, comps)."""
     if img.ndim == 2:
         img = img[:, :, None]
     h, w, nc = img.shape
@@ -779,7 +670,10 @@ def _prepare_encode_planes(img, quant, grayscale, sampling):
         if np.isscalar(quant)
         else np.asarray(quant, dtype=np.int64).reshape(64)
     )
-    return planes, samps, q, h, w
+    comps = [
+        {"id": ci + 1, "h": sh, "v": sv, "tq": 0} for ci, (sh, sv) in enumerate(samps)
+    ]
+    return planes, (h, w, comps), q
 
 
 def _fdct_quant(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -793,6 +687,46 @@ def _fdct_quant(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
     coeff = np.einsum("ux,nxy,vy->nuv", _A, blocks, _A)
     zz = coeff.reshape(-1, 64)[:, ZIGZAG]
     return np.round(zz / q[None, :]).astype(np.int64)
+
+
+def _segment(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
+
+
+def _encode_headers(sof, frame, q, ac, restart_interval=0):
+    """SOI, JFIF APP0, DQT (table 0, shared by every component), SOF,
+    DHT (table 0 luma, table 1 chroma; ``ac`` gives the two AC
+    (bits, vals) pairs) and, with restarts, DRI.  Returns the header
+    bytes and each component's (DC, AC) encode tables."""
+    h, w, comps = frame
+    out = bytearray(b"\xff\xd8")
+    out += _segment(0xE0, b"JFIF\x00\x01\x01\x00" + bytes([0, 1, 0, 1, 0, 0]))
+    out += _segment(0xDB, bytes([0x00]) + bytes(int(v) for v in q))
+    sof_body = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
+    sof_body += bytes([len(comps)])
+    for c in comps:
+        sof_body += bytes([c["id"], (c["h"] << 4) | c["v"], c["tq"]])
+    out += _segment(sof, sof_body)
+    dc = ((_DC_LUM_BITS, _DC_LUM_VALS), (_DC_CHR_BITS, _DC_CHR_VALS))
+    for th in range(min(len(comps), 2)):
+        for tc, (bits, vals) in ((0, dc[th]), (1, ac[th])):
+            out += _segment(0xC4, bytes([(tc << 4) | th] + bits + vals))
+    if restart_interval:
+        out += _segment(0xDD, restart_interval.to_bytes(2, "big"))
+    tabs = [
+        (_encode_table(*dc[min(ci, 1)]), _encode_table(*ac[min(ci, 1)]))
+        for ci in range(len(comps))
+    ]
+    return out, tabs
+
+
+def _sos(comp_ids, ss, se, ah, al) -> bytes:
+    """SOS header; component 1 uses tables 0, the others tables 1."""
+    body = bytearray([len(comp_ids)])
+    for cid in comp_ids:
+        th = 0 if cid == 1 else 1
+        body += bytes([cid, (th << 4) | th])
+    return _segment(0xDA, bytes(body + bytes([ss, se, (ah << 4) | al])))
 
 
 def encode_jpeg_baseline(
@@ -809,79 +743,26 @@ def encode_jpeg_baseline(
     scalar (flat table) or a 64-entry zig-zag table, applied to every
     component.  ``restart_interval`` > 0 emits DRI + RSTn every that
     many MCUs (exercises the decoder's restart path)."""
-    planes, samps, q, h, w = _prepare_encode_planes(
-        img, quant, grayscale, sampling
+    planes, frame, q = _prepare_encode_planes(img, quant, grayscale, sampling)
+    comps = frame[2]
+    out, tabs = _encode_headers(
+        0xC0, frame, q,
+        ((_AC_LUM_BITS, _AC_LUM_VALS), (_AC_CHR_BITS, _AC_CHR_VALS)),
+        restart_interval,
     )
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00\x01\x01\x00" + bytes(
-        [0, 1, 0, 1, 0, 0]
-    )
-    out += b"\xff\xdb" + (67).to_bytes(2, "big") + bytes([0x00]) + bytes(
-        int(v) for v in q
-    )
-    nc_out = len(planes)
-    sof = bytearray([8])
-    sof += h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([nc_out])
-    for cid in range(1, nc_out + 1):
-        ch, cv = samps[cid - 1]
-        sof += bytes([cid, (ch << 4) | cv, 0])  # all share quant table 0
-    out += b"\xff\xc0" + (len(sof) + 2).to_bytes(2, "big") + sof
-
-    def dht(tc, th, bits, vals):
-        body = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        return b"\xff\xc4" + (len(body) + 2).to_bytes(2, "big") + body
-
-    out += dht(0, 0, _DC_LUM_BITS, _DC_LUM_VALS)
-    out += dht(1, 0, _AC_LUM_BITS, _AC_LUM_VALS)
-    if nc_out == 3:
-        out += dht(0, 1, _DC_CHR_BITS, _DC_CHR_VALS)
-        out += dht(1, 1, _AC_CHR_BITS, _AC_CHR_VALS)
-    if restart_interval:
-        out += b"\xff\xdd" + (4).to_bytes(2, "big") + restart_interval.to_bytes(
-            2, "big"
-        )
-
-    sos = bytearray([nc_out])
-    for cid in range(1, nc_out + 1):
-        th = 0 if cid == 1 else 1
-        sos += bytes([cid, (th << 4) | th])
-    sos += bytes([0, 63, 0])
-    out += b"\xff\xda" + (len(sos) + 2).to_bytes(2, "big") + sos
-
-    # per-component quantized coefficients on each component's block grid
+    out += _sos([c["id"] for c in comps], 0, 63, 0, 0)
     coeffs = [_fdct_quant(p, q) for p in planes]
-    bws = [p.shape[1] // 8 for p in planes]
-    dc_tabs = [_encode_table(_DC_LUM_BITS, _DC_LUM_VALS)] + [
-        _encode_table(_DC_CHR_BITS, _DC_CHR_VALS)
-    ] * (nc_out - 1)
-    ac_tabs = [_encode_table(_AC_LUM_BITS, _AC_LUM_VALS)] + [
-        _encode_table(_AC_CHR_BITS, _AC_CHR_VALS)
-    ] * (nc_out - 1)
     wr = _BitWriter()
-    preds = [0] * nc_out
-    mcux = w // (8 * hmax)
-    mcuy = h // (8 * vmax)
-    mcu_count = 0
+    preds = [0] * len(comps)
     rst_n = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                wr.flush()
-                wr.out += bytes([0xFF, 0xD0 + rst_n])
-                rst_n = (rst_n + 1) % 8
-                preds = [0] * nc_out
-            for ci in range(nc_out):
-                ch, cv = samps[ci]
-                for by in range(cv):
-                    for bx in range(ch):
-                        bidx = (my * cv + by) * bws[ci] + (mx * ch + bx)
-                        preds[ci] = _encode_block(
-                            wr, coeffs[ci][bidx], preds[ci], dc_tabs[ci], ac_tabs[ci]
-                        )
-            mcu_count += 1
+    for mcu, blocks in enumerate(_scan_blocks(frame, list(enumerate(comps)))):
+        if restart_interval and mcu and mcu % restart_interval == 0:
+            wr.flush()
+            wr.out += bytes([0xFF, 0xD0 + rst_n])
+            rst_n = (rst_n + 1) % 8
+            preds = [0] * len(comps)
+        for ci, bidx in blocks:
+            preds[ci] = _encode_block(wr, coeffs[ci][bidx], preds[ci], *tabs[ci])
     wr.flush()
     out += wr.out
     out += b"\xff\xd9"  # EOI
@@ -1019,95 +900,45 @@ def encode_jpeg_progressive(
     Because only the entropy coding differs, ``decode_jpeg`` of this
     stream is BIT-IDENTICAL to decoding the baseline encoding — the
     round-trip property the tests pin."""
-    planes, samps, q, h, w = _prepare_encode_planes(
-        img, quant, grayscale, sampling
-    )
-    nc_out = len(planes)
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    mcux = w // (8 * hmax)
-    mcuy = h // (8 * vmax)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00\x01\x01\x00" + bytes(
-        [0, 1, 0, 1, 0, 0]
-    )
-    out += b"\xff\xdb" + (67).to_bytes(2, "big") + bytes([0x00]) + bytes(
-        int(v) for v in q
-    )
-    sof = bytearray([8])
-    sof += h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([nc_out])
-    for cid in range(1, nc_out + 1):
-        ch, cv = samps[cid - 1]
-        sof += bytes([cid, (ch << 4) | cv, 0])
-    out += b"\xff\xc2" + (len(sof) + 2).to_bytes(2, "big") + sof  # SOF2
-
-    def dht(tc, th, bits, vals):
-        body = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        return b"\xff\xc4" + (len(body) + 2).to_bytes(2, "big") + body
-
-    out += dht(0, 0, _DC_LUM_BITS, _DC_LUM_VALS)
-    out += dht(1, 0, _AC_PROG_BITS, _AC_PROG_VALS)
-    if nc_out == 3:
-        out += dht(0, 1, _DC_CHR_BITS, _DC_CHR_VALS)
-        out += dht(1, 1, _AC_PROG_BITS, _AC_PROG_VALS)
-
+    planes, frame, q = _prepare_encode_planes(img, quant, grayscale, sampling)
+    comps = frame[2]
+    nc_out = len(comps)
+    out, tabs = _encode_headers(0xC2, frame, q, ((_AC_PROG_BITS, _AC_PROG_VALS),) * 2)
     coeffs = [_fdct_quant(p, q) for p in planes]
-    bws = [p.shape[1] // 8 for p in planes]
-    dc_tabs = [_encode_table(_DC_LUM_BITS, _DC_LUM_VALS)] + [
-        _encode_table(_DC_CHR_BITS, _DC_CHR_VALS)
-    ] * (nc_out - 1)
-    ac_tabs = [_encode_table(_AC_PROG_BITS, _AC_PROG_VALS)] * nc_out
-
-    def sos_header(comp_ids, ss, se, ah, al):
-        body = bytearray([len(comp_ids)])
-        for cid in comp_ids:
-            th = 0 if cid == 1 else 1
-            body += bytes([cid, (th << 4) | th])
-        body += bytes([ss, se, (ah << 4) | al])
-        return b"\xff\xda" + (len(body) + 2).to_bytes(2, "big") + bytes(body)
 
     def dc_scan(ah, al):
         nonlocal out
-        out += sos_header(list(range(1, nc_out + 1)), 0, 0, ah, al)
+        out += _sos([c["id"] for c in comps], 0, 0, ah, al)
         wr = _BitWriter()
         preds = [0] * nc_out
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci in range(nc_out):
-                    ch, cv = samps[ci]
-                    for by in range(cv):
-                        for bx in range(ch):
-                            bidx = (my * cv + by) * bws[ci] + (mx * ch + bx)
-                            dc = int(coeffs[ci][bidx][0])
-                            if ah == 0:
-                                va = dc >> al  # arithmetic shift (G.1.2.1)
-                                diff = va - preds[ci]
-                                preds[ci] = va
-                                t = _category(diff)
-                                code, ln = dc_tabs[ci][t]
-                                wr.write(code, ln)
-                                if t:
-                                    wr.write(
-                                        diff if diff >= 0 else diff + (1 << t) - 1,
-                                        t,
-                                    )
-                            else:
-                                wr.write((dc >> al) & 1, 1)
+        for blocks in _scan_blocks(frame, list(enumerate(comps))):
+            for ci, bidx in blocks:
+                dc = int(coeffs[ci][bidx][0])
+                if ah == 0:
+                    va = dc >> al  # arithmetic shift (G.1.2.1)
+                    diff = va - preds[ci]
+                    preds[ci] = va
+                    t = _category(diff)
+                    wr.write(*tabs[ci][0][t])
+                    if t:
+                        wr.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+                else:
+                    wr.write((dc >> al) & 1, 1)
         wr.flush()
         out += wr.out
 
     def ac_scan(ci, ss, se, ah, al):
         nonlocal out
-        out += sos_header([ci + 1], ss, se, ah, al)
+        out += _sos([ci + 1], ss, se, ah, al)
         wr = _BitWriter()
         st = _ProgACState()
+        ac_tab = tabs[ci][1]
         for blk in coeffs[ci]:  # raster order == used grid (MCU-aligned)
             if ah == 0:
-                _encode_ac_first(wr, blk, ss, se, al, ac_tabs[ci], st)
+                _encode_ac_first(wr, blk, ss, se, al, ac_tab, st)
             else:
-                _encode_ac_refine(wr, blk, ss, se, al, ac_tabs[ci], st)
-        st.flush(wr, ac_tabs[ci])
+                _encode_ac_refine(wr, blk, ss, se, al, ac_tab, st)
+        st.flush(wr, ac_tab)
         wr.flush()
         out += wr.out
 

@@ -35,6 +35,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .prefix_code import canonical_code, decode_symbol
+
 __all__ = ["decode_webp", "encode_webp_lossless"]
 
 # order in which code-length code lengths are stored (spec §
@@ -72,58 +74,46 @@ class _BitReaderLSB:
         self.pos = 0
         self.bit = 0
 
+    def read_bit(self) -> int:
+        if self.pos >= len(self.buf):
+            raise ValueError("truncated VP8L bitstream")
+        v = (self.buf[self.pos] >> self.bit) & 1
+        self.bit += 1
+        if self.bit == 8:
+            self.bit = 0
+            self.pos += 1
+        return v
+
     def read(self, n: int) -> int:
         v = 0
         for i in range(n):
-            if self.pos >= len(self.buf):
-                raise ValueError("truncated VP8L bitstream")
-            v |= ((self.buf[self.pos] >> self.bit) & 1) << i
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
+            v |= self.read_bit() << i
         return v
 
 
 class _Code:
-    """Canonical prefix code from a length array.  VP8L canonical
-    codes assign codes by increasing length then symbol order, MSB
-    first when walking the tree; a single-symbol code costs 0 bits."""
+    """Canonical prefix code from a length array: codes by increasing
+    length then symbol order; a single-symbol code costs 0 bits."""
 
     __slots__ = ("single", "table")
 
     def __init__(self, lengths):
-        nz = [(ln, sym) for sym, ln in enumerate(lengths) if ln > 0]
+        nz = sorted((ln, sym) for sym, ln in enumerate(lengths) if ln > 0)
         if not nz:
             raise ValueError("empty VP8L prefix code")
         if len(nz) == 1:
             self.single = nz[0][1]
             self.table = None
             return
-        self.single = None
-        nz.sort()
-        table = {}
-        code = 0
-        prev_len = nz[0][0]
-        for ln, sym in nz:
-            code <<= ln - prev_len
-            prev_len = ln
-            table[(ln, code)] = sym
-            code += 1
-        if code != (1 << prev_len):
+        if sum(1 << (15 - ln) for ln, _ in nz) != 1 << 15:  # Kraft equality
             raise ValueError("VP8L prefix code is not complete")
-        self.table = table
+        self.single = None
+        self.table = canonical_code(nz)
 
     def decode(self, br: _BitReaderLSB) -> int:
         if self.single is not None:
             return self.single
-        code = 0
-        for length in range(1, 16):
-            code = (code << 1) | br.read(1)
-            sym = self.table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid VP8L prefix code in stream")
+        return decode_symbol(self.table, br.read_bit)
 
 
 def _read_code(br: _BitReaderLSB, alphabet_size: int) -> _Code:

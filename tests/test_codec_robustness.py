@@ -160,7 +160,8 @@ def _fuzz_cases(good: bytes, rng) -> list[bytes]:
 
 
 @pytest.mark.parametrize(
-    "codec", ["jpeg", "jpeg_prog", "png", "gif", "tiff", "webp", "wav", "avi"]
+    "codec",
+    ["jpeg", "jpeg_420_rst", "jpeg_prog", "png", "gif", "tiff", "webp", "wav", "avi"],
 )
 def test_fuzz_decoders_fail_cleanly(codec):
     """Every decoder either returns a valid array or raises
@@ -173,6 +174,17 @@ def test_fuzz_decoders_fail_cleanly(codec):
 
         good = encode_jpeg_baseline(
             rng.randint(0, 256, (16, 16)).astype(np.uint8), quant=4
+        )
+    elif codec == "jpeg_420_rst":
+        # subsampled MCUs (4 luma + 2 chroma blocks) with a restart
+        # marker every 2 MCUs
+        from ligra_spark.functions.jpeg import decode_jpeg as dec
+
+        good = encode_jpeg_baseline(
+            rng.randint(0, 256, (32, 48, 3)).astype(np.uint8),
+            quant=4,
+            sampling="420",
+            restart_interval=2,
         )
     elif codec == "jpeg_prog":
         from ligra_spark.functions.jpeg import (
@@ -224,7 +236,7 @@ def test_fuzz_decoders_fail_cleanly(codec):
             continue
         # a successful decode of a mutated payload is fine as long as
         # the result is sane and bounded
-        if codec in ("jpeg", "jpeg_prog", "png", "gif", "tiff", "webp"):
+        if codec in ("jpeg", "jpeg_420_rst", "jpeg_prog", "png", "gif", "tiff", "webp"):
             assert out.ndim == 3 and out.shape[2] == 3
             assert out.shape[0] <= 1 << 16 and out.shape[1] <= 1 << 16
 
@@ -516,6 +528,68 @@ def test_jpeg_bit_buffers_stay_bounded(monkeypatch):
         assert len(buf) > 4096
         jpeg.decode_jpeg(buf)
     assert 0 < widest["read"] < 64 and 0 < widest["write"] < 64, widest
+
+
+def test_jpeg_hostile_huffman_symbols_raise_valueerror():
+    # 8-bit JPEG DC categories end at 11 and AC sizes at 10 (T.81
+    # Tables F.1/F.2); a DHT mapping codes to larger symbols, or DC
+    # differences that walk the predictor past any 8-bit DC value, must
+    # raise ValueError -- not overflow the integer coefficient store
+    from ligra_spark.functions import jpeg
+
+    rng = np.random.RandomState(4)
+    buf = jpeg.encode_jpeg_baseline(
+        rng.randint(0, 256, (16, 16)).astype(np.uint8), quant=4
+    )
+    dc_dht = buf.find(b"\xff\xc4")  # DC table 0: 12 symbols after counts
+    ac_dht = buf.find(b"\xff\xc4", dc_dht + 2)  # AC table 0: 162 symbols
+    pad = b"\x00" * 256  # entropy bits for 200-bit magnitudes
+    for at, nsym, sym in ((dc_dht, 12, 200), (ac_dht, 162, 0x0B)):
+        bad = bytearray(buf)
+        bad[at + 21 : at + 21 + nsym] = bytes([sym] * nsym)
+        bad[-2:-2] = pad
+        with pytest.raises(ValueError):
+            jpeg.decode_jpeg(bytes(bad))
+
+    # progressive DC first pass at Al=13 whose every difference is
+    # +2047: legal categories, but the predictor leaves the DC range
+    _, frame, q = jpeg._prepare_encode_planes(
+        np.zeros((128, 128), dtype=np.uint8), 1, None, "444"
+    )
+    out, tabs = jpeg._encode_headers(
+        0xC2, frame, q, ((jpeg._AC_PROG_BITS, jpeg._AC_PROG_VALS),) * 2
+    )
+    out += jpeg._sos([1], 0, 0, 0, 13)
+    wr = jpeg._BitWriter()
+    for _ in range(256):
+        wr.write(*tabs[0][0][11])
+        wr.write(2047, 11)
+    wr.flush()
+    with pytest.raises(ValueError):
+        jpeg.decode_jpeg(bytes(out + wr.out + b"\xff\xd9"))
+
+
+def test_jpeg_malformed_headers_raise_valueerror():
+    # header fields that index or divide must be checked before use
+    from ligra_spark.functions import jpeg
+
+    img = np.random.RandomState(6).randint(0, 256, (16, 16)).astype(np.uint8)
+    base = jpeg.encode_jpeg_baseline(img, quant=4)
+    prog = jpeg.encode_jpeg_progressive(img, quant=4)
+    sof = b"\xff\xc0\x00\x0b\x08\x00\x10\x00\x10\x01\x01"
+    dc_scan = b"\xff\xda\x00\x08\x01\x01\x00\x00\x00\x01"
+    refine = b"\xff\xda\x00\x08\x01\x01\x00\x01\x3f\x21"
+    cases = [
+        (base, sof, b"\xff\xc0\x00\x08\x08\x00\x10\x00\x10\x01\x01"),  # SOF cut short
+        (base, sof + b"\x11", sof + b"\x01"),  # horizontal sampling factor 0
+        (prog, dc_scan, b"\xff\xda\x00\x06\x00\x00\x00\x01"),  # no components
+        (prog, refine, refine[:6] + b"\x03" + refine[7:]),  # undefined AC table
+        (prog, refine, refine[:8] + b"\xc8" + refine[9:]),  # Se past 63
+    ]
+    for buf, old, new in cases:
+        assert buf.count(old) == 1
+        with pytest.raises(ValueError):
+            jpeg.decode_jpeg(buf.replace(old, new))
 
 
 def test_jpeg_fill_bytes_and_stray_standalone_markers():

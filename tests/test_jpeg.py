@@ -111,6 +111,41 @@ def test_unsupported_sof_and_frankenstein_sof2():
         decode_jpeg(bytes(buf))
 
 
+@pytest.mark.parametrize("sampling", ["444", "420"])
+def test_baseline_one_scan_per_component(sampling):
+    # a sequential frame may send each component in its own
+    # non-interleaved scan (T.81 A.2.2: the component's block grid in
+    # raster order); it must decode exactly like the interleaved stream
+    from ligra_spark.functions import jpeg
+
+    rng = np.random.RandomState(29)
+    img = rng.randint(0, 256, size=(32, 48, 3)).astype(np.uint8)
+    want = jpeg.encode_jpeg_baseline(img, quant=6, sampling=sampling)
+    planes, _, q = jpeg._prepare_encode_planes(img, 6, None, sampling)
+    out = bytearray(want[: want.find(b"\xff\xda")])  # SOI .. DHT
+    for ci, plane in enumerate(planes):
+        lum = ci == 0
+        dc_tab = jpeg._encode_table(
+            *((jpeg._DC_LUM_BITS, jpeg._DC_LUM_VALS) if lum
+              else (jpeg._DC_CHR_BITS, jpeg._DC_CHR_VALS))
+        )
+        ac_tab = jpeg._encode_table(
+            *((jpeg._AC_LUM_BITS, jpeg._AC_LUM_VALS) if lum
+              else (jpeg._AC_CHR_BITS, jpeg._AC_CHR_VALS))
+        )
+        th = 0 if lum else 0x11
+        out += bytes([0xFF, 0xDA, 0, 8, 1, ci + 1, th, 0, 63, 0])
+        wr = jpeg._BitWriter()
+        pred = 0
+        for zz in jpeg._fdct_quant(plane, q):
+            pred = jpeg._encode_block(wr, zz, pred, dc_tab, ac_tab)
+        wr.flush()
+        out += wr.out
+    out += b"\xff\xd9"
+    assert bytes(out).count(b"\xff\xda") == 3
+    assert (decode_jpeg(bytes(out)) == decode_jpeg(want)).all()
+
+
 def test_not_jpeg_rejected():
     with pytest.raises(ValueError):
         decode_jpeg(b"NOPE")
