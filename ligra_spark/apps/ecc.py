@@ -6,23 +6,27 @@ vertex's eccentricity as the last round its mask grew — i.e. the max
 BFS distance from any sample source that reaches it.
 
 Where the reference samples sources by hash (and re-samples for a
-second phase), this app takes EXPLICIT sources so results are
+second phase), ``ecc_estimate`` takes EXPLICIT sources so results are
 deterministic and SQL-expressible (the driver query uses sources
-0..15); pass hashed samples for reference-shaped runs (see
-``apps.radii`` which keeps the hashed-sampling variant).
+0..15); ``ecc_kbfs`` and ``apps.radii`` draw the reference's hashed
+samples.
 
-Per-superstep plan: identical to radii — one groupBy(dst) shuffle for
-the bit_or, one co-partitioned state join; the frontier (mask-changed
-vertices) shrinks as waves die out, flipping the engine onto the
-broadcast sparse path (``ligra.h:261`` direction optimization).
+``_kbfs_wave`` is the ONE bitmask-wave superstep loop: every app here
+and ``apps.radii`` (bit_or), ``apps.ecc_fm`` (bit_or over packed FM
+sketches) and ``apps.ecc_loglog`` (per-register max) run it, each
+supplying only its seed masks and its lattice join.  Per superstep:
+one groupBy(dst) shuffle for the join, one co-partitioned state join;
+the frontier (mask-changed vertices) shrinks as waves die out,
+flipping the engine onto the broadcast sparse path (``ligra.h:261``
+direction optimization).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import IterState, edge_map, msgs_join_side
+from ..engine import IterState, edge_map_multi, msgs_join_side
 
 __all__ = ["ecc_estimate", "ecc_exact", "ecc_kbfs", "ecc_simple_approx"]
 
@@ -31,15 +35,87 @@ def _signed64(bit: int) -> int:
     return bit - (1 << 64) if bit >= (1 << 63) else bit
 
 
+def _source_masks(spark, sources) -> tuple[DataFrame, int]:
+    """(id, init_mask) with bit i set on ``sources[i]`` — a repeated
+    source ORs its bits (the deterministic superset of the reference's
+    last-writer init race), bits past 63 are dropped — and the number
+    of distinct sources."""
+    bits: dict[int, int] = {}
+    for i, v in enumerate(sources):
+        bits[int(v)] = bits.get(int(v), 0) | _signed64(
+            (1 << i) & 0xFFFFFFFFFFFFFFFF
+        )
+    return (
+        spark.createDataFrame(list(bits.items()), "id long, init_mask long"),
+        len(bits),
+    )
+
+
 def _kbfs_wave(
+    graph,
+    init: DataFrame,
+    fsize: int,
+    aggs: list,
+    merged: Column,
+    on_superstep=None,
+) -> tuple[DataFrame, int]:
+    """The bitmask-wave loop from ``init (id, mask, ecc, changed)``,
+    ``fsize`` = its changed-row count.  Each superstep the changed
+    vertices send their mask through ``aggs`` (``edge_map_multi``
+    triples over the frontier's ``mask``), ``merged`` (a Column over
+    the state ⋈ msgs row: ``mask`` and the aggregate names, NULL where
+    no message arrived) is the joined mask, and a vertex whose mask
+    moved records the round in ``ecc`` and joins the next frontier.
+    Returns ((id, mask, ecc, changed), rounds); ecc stays NULL for
+    vertices ``init`` left NULL and no wave reached."""
+    st = IterState(init, num_partitions=graph.num_partitions)
+    rounds = 0
+    while fsize > 0:
+        rounds += 1
+        msgs = edge_map_multi(
+            graph,
+            st.df.filter("changed").select("id", "mask"),
+            aggs,
+            frontier_size=fsize,
+            extra_frontier_cols=("mask",),
+        )
+        grew = F.col("new_mask") != F.col("mask")
+        new = (
+            st.df.join(msgs_join_side(msgs, fsize, graph.n), "id", "left")
+            .select("id", merged.alias("new_mask"), "mask", "ecc")
+            .select(
+                "id",
+                F.col("new_mask").alias("mask"),
+                F.when(grew, F.lit(rounds))
+                .otherwise(F.col("ecc"))
+                .cast("int")
+                .alias("ecc"),
+                grew.alias("changed"),
+            )
+        )
+        new, (fsize,) = st.advance(new, F.count_if("changed"))
+        if on_superstep:
+            on_superstep(rounds, {"frontier": fsize})
+    return st.df, rounds
+
+
+def _or_join() -> tuple[list, Column]:
+    """writeOr as ``_kbfs_wave``'s (aggs, merged): a vertex's mask ORs
+    in its in-neighbours' masks."""
+    return (
+        [("agg", F.col("mask"), F.bit_or)],
+        F.col("mask").bitwiseOR(F.coalesce("agg", F.lit(0))),
+    )
+
+
+def _or_wave(
     graph, starts: DataFrame, n_sources: int, on_superstep=None
 ) -> tuple[DataFrame, int]:
-    """Run the 64-wave bitmask BFS loop from ``starts (id, init_mask)``.
-    Returns ((id, mask, ecc) with ecc NULL for never-reached
-    non-sources, rounds).  ``n_sources`` seeds the frontier-size
-    estimate for the sparse/dense switch; sources from different
-    components may share mask bits (waves cannot cross components, so
-    per-vertex last-change rounds are unaffected)."""
+    """``_kbfs_wave`` under writeOr from ``starts (id, init_mask)``:
+    sources start at ecc 0 in the frontier, every other vertex at mask
+    0, ecc NULL.  ``n_sources`` is the distinct source count; sources
+    from different components may share mask bits (waves cannot cross
+    components, so per-vertex last-change rounds are unaffected)."""
     join_starts = (
         F.broadcast(starts) if n_sources <= (1 << 16) else starts
     )
@@ -49,43 +125,7 @@ def _kbfs_wave(
         F.when(F.col("init_mask").isNotNull(), 0).cast("int").alias("ecc"),
         F.col("init_mask").isNotNull().alias("changed"),
     )
-    st = IterState(init, num_partitions=graph.num_partitions)
-    rounds, fsize = 0, n_sources
-    while fsize > 0:
-        rounds += 1
-        frontier = st.df.filter("changed").select("id", "mask")
-        msgs = edge_map(
-            graph,
-            frontier,
-            message=F.col("mask"),
-            aggregate=F.bit_or,
-            frontier_size=fsize,
-            extra_frontier_cols=("mask",),
-        )
-        new = (
-            st.df.join(msgs_join_side(msgs, fsize, graph.n), "id", "left")
-            .select(
-                "id",
-                F.col("mask")
-                .bitwiseOR(F.coalesce("agg", F.lit(0)))
-                .alias("new_mask"),
-                "mask",
-                "ecc",
-            )
-            .select(
-                "id",
-                F.col("new_mask").alias("mask"),
-                F.when(F.col("new_mask") != F.col("mask"), F.lit(rounds))
-                .otherwise(F.col("ecc"))
-                .cast("int")
-                .alias("ecc"),
-                (F.col("new_mask") != F.col("mask")).alias("changed"),
-            )
-        )
-        new, (fsize,) = st.advance(new, F.count_if("changed"))
-        if on_superstep:
-            on_superstep(rounds, {"frontier": fsize})
-    return st.df, rounds
+    return _kbfs_wave(graph, init, n_sources, *_or_join(), on_superstep)
 
 
 def ecc_estimate(
@@ -101,14 +141,8 @@ def ecc_estimate(
     """
     if len(sources) > 64:
         raise ValueError("at most 64 simultaneous BFS waves (64-bit masks)")
-    spark = graph.spark
-    bits: dict[int, int] = {}
-    for i, v in enumerate(sources):
-        bits[int(v)] = bits.get(int(v), 0) | _signed64(1 << i)
-    starts = spark.createDataFrame(
-        [(v, b) for v, b in bits.items()], "id long, init_mask long"
-    )
-    res, rounds = _kbfs_wave(graph, starts, len(bits), on_superstep=on_superstep)
+    starts, n_sources = _source_masks(graph.spark, sources)
+    res, rounds = _or_wave(graph, starts, n_sources, on_superstep)
     return res.filter(F.col("ecc").isNotNull()).select("id", "ecc"), rounds
 
 
@@ -137,14 +171,10 @@ def ecc_exact(
     acc: DataFrame | None = None
     total_rounds = 0
     for start in range(0, n, batch_size):
-        sources = list(range(start, min(start + batch_size, n)))
-        starts = spark.createDataFrame(
-            [(v, _signed64(1 << i)) for i, v in enumerate(sources)],
-            "id long, init_mask long",
+        starts, n_sources = _source_masks(
+            spark, range(start, min(start + batch_size, n))
         )
-        wave, rounds = _kbfs_wave(
-            graph, starts, len(sources), on_superstep=on_superstep
-        )
+        wave, rounds = _or_wave(graph, starts, n_sources, on_superstep)
         total_rounds += rounds
         batch = wave.filter(F.col("ecc").isNotNull()).select(
             "id", F.col("ecc").alias("becc")
@@ -196,20 +226,25 @@ def ecc_simple_approx(graph, seed: int = 0) -> tuple[DataFrame, int]:
     is pinned as position ``hashInt(seed) %% size`` in component-id
     order (the same pinned-sampling convention as ``apps.radii`` and
     ``ecc_kbfs``; RV.C:170 uses this exact fallback expression).  All
-    components BFS simultaneously (one source per component, one
-    shared distance column — waves cannot cross components).  Returns
+    components BFS simultaneously in the shared level BFS
+    (``apps.bfs._level_bfs``: one source per component, one shared
+    level column — waves cannot cross components).  Returns
     ((id, ecc) for all n, BFS supersteps)."""
     import numpy as np
 
     from ..hashing import hash_int32
-    from .ecc_tk import _cc_positions, _combined_bfs
+    from .bfs import _level_bfs, _source_levels
+    from .ecc_tk import _cc_positions
 
     pos = _cc_positions(graph)
     h = int(hash_int32(np.uint32(seed)))
     sources = pos.filter(
         (F.col("csize") > 2) & (F.col("pos") == F.pmod(F.lit(h), F.col("csize")))
     ).select("id", "component")
-    levels, rounds, _ = _combined_bfs(graph, sources, sources.count())
+    st, _, rounds = _level_bfs(
+        graph, _source_levels(graph, sources), sources.count()
+    )
+    levels = st.df.filter(F.col("level").isNotNull())
     comp_ecc = (
         levels.join(pos.select("id", "component"), "id")
         .groupBy("component")
@@ -283,7 +318,7 @@ def ecc_kbfs(
     )
     src1 = chosen.join(pos, ["component", "pos"]).select("id", "component")
     n_src1 = src1.count()
-    wave1, r1 = _kbfs_wave(graph, _with_bits(src1), n_src1, on_superstep)
+    wave1, r1 = _or_wave(graph, _with_bits(src1), n_src1, on_superstep)
     ecc1 = pos.join(wave1.select("id", "ecc"), "id", "left").select(
         "id",
         "component",
@@ -308,7 +343,7 @@ def ecc_kbfs(
         )
         n_src2 = src2.count()
         if n_src2 > 0:
-            wave2, r2 = _kbfs_wave(graph, _with_bits(src2), n_src2, on_superstep)
+            wave2, r2 = _or_wave(graph, _with_bits(src2), n_src2, on_superstep)
             ecc1 = ecc1.join(
                 wave2.select("id", F.col("ecc").alias("ecc2")), "id", "left"
             ).select(

@@ -10,10 +10,12 @@ stops when the ball stops growing, so the last-change round estimates
 the eccentricity.
 
 Spark shape: the ``length <= 2`` words pack into ONE long column
-(OR has no carries, so per-word OR == packed OR), making each round
-exactly the radii plan — one ``bit_or`` edge_map shuffle + the state
-join.  Init masks come from the bit-exact ``hashing.hash_int32`` port
-inside an Arrow-batched pandas UDF — no driver-side n-row generation.
+(OR has no carries, so per-word OR == packed OR), so the app runs the
+kBFS bitmask wave (``apps.ecc._kbfs_wave``) under the same ``bit_or``
+join as radii, with every vertex seeded and in the first frontier;
+this module supplies only the init masks.  They come from the
+bit-exact ``hashing.hash_int32`` port inside an Arrow-batched pandas
+UDF — no driver-side n-row generation.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import IterState, edge_map, msgs_join_side
+from .ecc import _kbfs_wave, _or_join
 
 __all__ = ["ecc_fm", "fm_mask_udf"]
 
@@ -62,65 +64,11 @@ def ecc_fm(
 ) -> tuple[DataFrame, int]:
     """Returns ((id, ecc) over all n vertices, rounds run).  ecc = last
     round the packed FM sketch grew (0 if it never did)."""
-    mask = fm_mask_udf(length, seed)
     init = graph.vertices.select(
         "id",
-        F.lit(0).cast("long").alias("visited"),
-        mask(F.col("id")).alias("nxt"),
+        fm_mask_udf(length, seed)(F.col("id")).alias("mask"),
         F.lit(0).cast("int").alias("ecc"),
-        F.lit(True).alias("in_frontier"),
+        F.lit(True).alias("changed"),
     )
-    st = IterState(init, num_partitions=graph.num_partitions)
-    rounds, fsize = 0, graph.n
-    while fsize > 0:
-        rounds += 1
-        # vertexMap sync: Visited = NextVisited (Ecc_Vertex_F)
-        synced = st.df.select(
-            "id",
-            F.when(F.col("in_frontier"), F.col("nxt"))
-            .otherwise(F.col("visited"))
-            .alias("visited"),
-            "nxt",
-            "ecc",
-            "in_frontier",
-        )
-        frontier = synced.filter("in_frontier").select("id", "visited")
-        msgs = edge_map(
-            graph,
-            frontier,
-            message=F.col("visited"),
-            aggregate=F.bit_or,
-            frontier_size=fsize,
-            extra_frontier_cols=("visited",),
-        )
-        new = (
-            synced.join(msgs_join_side(msgs, fsize, graph.n), "id", "left")
-            .select(
-                "id",
-                "visited",
-                F.col("visited")
-                .bitwiseOR(F.coalesce("agg", F.lit(0)))
-                .alias("to_write"),
-                "nxt",
-                "ecc",
-            )
-            .select(
-                "id",
-                "visited",
-                F.when(
-                    F.col("to_write") != F.col("visited"),
-                    F.col("nxt").bitwiseOR(F.col("to_write")),
-                )
-                .otherwise(F.col("nxt"))
-                .alias("nxt"),
-                F.when(F.col("to_write") != F.col("visited"), F.lit(rounds))
-                .otherwise(F.col("ecc"))
-                .cast("int")
-                .alias("ecc"),
-                (F.col("to_write") != F.col("visited")).alias("in_frontier"),
-            )
-        )
-        new, (fsize,) = st.advance(new, F.count_if("in_frontier"))
-        if on_superstep:
-            on_superstep(rounds, {"frontier": fsize})
-    return st.df.select("id", F.col("ecc").cast("long").alias("ecc")), rounds
+    wave, rounds = _kbfs_wave(graph, init, graph.n, *_or_join(), on_superstep)
+    return wave.select("id", F.col("ecc").cast("long").alias("ecc")), rounds

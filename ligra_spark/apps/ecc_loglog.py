@@ -6,7 +6,10 @@ word (``counter |= rightMostBit(hashInt(i*10 + j + seed*10)) << 6j``,
 (the broadword-max trick, ``LogLog-Ecc.C:40-57`` — our registers are
 unpacked into 10 Catalyst expressions instead, so the max is 10 plain
 ``max`` aggregates in ONE groupBy shuffle via ``edge_map_multi``);
-``ecc[v]`` = last round any register grew.
+``ecc[v]`` = last round any register grew.  The app runs the kBFS
+bitmask wave (``apps.ecc._kbfs_wave``) with every vertex seeded and in
+the first frontier; this module supplies the init counters and the
+lattice join (10 register maxima, repacked into the one mask column).
 
 Determinism note: the reference gates the change flag on the RACY
 ``NextVisitedArray`` growth (``Ecc_F::update``); we gate on the
@@ -20,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..engine import IterState, edge_map_multi, msgs_join_side
+from .ecc import _kbfs_wave
 
 __all__ = ["ecc_loglog", "loglog_mask_udf"]
 
@@ -70,68 +73,23 @@ def ecc_loglog(
 ) -> tuple[DataFrame, int]:
     """Returns ((id, ecc) over all n vertices, rounds run).  ecc = last
     round any of the 10 packed LogLog registers grew (0 if never)."""
-    mask = loglog_mask_udf(seed)
     init = graph.vertices.select(
         "id",
-        F.lit(0).cast("long").alias("visited"),
-        mask(F.col("id")).alias("nxt"),
+        loglog_mask_udf(seed)(F.col("id")).alias("mask"),
         F.lit(0).cast("int").alias("ecc"),
-        F.lit(True).alias("in_frontier"),
+        F.lit(True).alias("changed"),
     )
-    st = IterState(init, num_partitions=graph.num_partitions)
-    rounds, fsize = 0, graph.n
-    while fsize > 0:
-        rounds += 1
-        synced = st.df.select(
-            "id",
-            F.when(F.col("in_frontier"), F.col("nxt"))
-            .otherwise(F.col("visited"))
-            .alias("visited"),
-            "nxt",
-            "ecc",
-            "in_frontier",
-        )
-        frontier = synced.filter("in_frontier").select("id", "visited")
-        msgs = edge_map_multi(
-            graph,
-            frontier,
-            aggs=[
-                (f"a{j}", _reg(F.col("visited"), j), F.max) for j in range(NREG)
-            ],
-            frontier_size=fsize,
-            extra_frontier_cols=("visited",),
-        )
-        to_write = _repack(
+    wave, rounds = _kbfs_wave(
+        graph, init, graph.n,
+        [(f"a{j}", _reg(F.col("mask"), j), F.max) for j in range(NREG)],
+        _repack(
             [
                 F.greatest(
-                    _reg(F.col("visited"), j), F.coalesce(F.col(f"a{j}"), F.lit(0))
+                    _reg(F.col("mask"), j), F.coalesce(F.col(f"a{j}"), F.lit(0))
                 )
                 for j in range(NREG)
             ]
-        )
-        nxt_merged = _repack(
-            [
-                F.greatest(_reg(F.col("nxt"), j), _reg(F.col("_tw"), j))
-                for j in range(NREG)
-            ]
-        )
-        new = (
-            synced.join(msgs_join_side(msgs, fsize, graph.n), "id", "left")
-            .select("id", "visited", to_write.alias("_tw"), "nxt", "ecc")
-            .select(
-                "id",
-                "visited",
-                F.when(F.col("_tw") != F.col("visited"), nxt_merged)
-                .otherwise(F.col("nxt"))
-                .alias("nxt"),
-                F.when(F.col("_tw") != F.col("visited"), F.lit(rounds))
-                .otherwise(F.col("ecc"))
-                .cast("int")
-                .alias("ecc"),
-                (F.col("_tw") != F.col("visited")).alias("in_frontier"),
-            )
-        )
-        new, (fsize,) = st.advance(new, F.count_if("in_frontier"))
-        if on_superstep:
-            on_superstep(rounds, {"frontier": fsize})
-    return st.df.select("id", F.col("ecc").cast("long").alias("ecc")), rounds
+        ),
+        on_superstep,
+    )
+    return wave.select("id", F.col("ecc").cast("long").alias("ecc")), rounds

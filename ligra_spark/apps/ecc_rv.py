@@ -30,7 +30,10 @@ components); per-source distances are carried as (sample, id, level)
 pair tables — the distributed twin of the reference's
 maxSampleSize × n distance matrix (``RV.C:258-261`` allocates exactly
 that), so memory is O(samples · component size) by design of the
-algorithm, not an artifact of the port.
+algorithm, not an artifact of the port.  The w-BFS runs the shared
+level BFS (``apps.bfs._level_bfs``); the per-sample pair BFS and the
+Ngh-index propagation are ``edge_map`` passes with their known
+frontier sizes.
 
 The reference seeds with rand()/time() — inherently nondeterministic —
 so ``seed`` is pinned as a parameter, like ``apps.radii``.
@@ -43,7 +46,9 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ecc_tk import _cc_positions, _combined_bfs
+from ..engine import edge_map
+from .bfs import _level_bfs, _source_levels
+from .ecc_tk import _cc_positions
 
 __all__ = ["ecc_clrstv", "ecc_rv"]
 
@@ -115,14 +120,15 @@ def _pair_bfs(graph, sources: DataFrame) -> tuple[DataFrame, int]:
         .localCheckpoint(eager=True)
     )
     frontier = visited
-    lvl, fcount = 0, 1
+    lvl, fcount = 0, visited.count()
     while fcount > 0:
         lvl += 1
-        msgs = (
-            frontier.select("sample", F.col("id").alias("src"))
-            .join(graph.edges, "src")
-            .select("sample", F.col("dst").alias("id"))
-            .distinct()
+        # one (sample, id) row per reached pair: the per-sample frontiers
+        # share one edge-map pass, grouped by sample
+        msgs = edge_map(
+            graph, frontier, message=F.lit(1), aggregate=F.min,
+            frontier_size=fcount, extra_frontier_cols=("sample",),
+            group_frontier_cols=("sample",),
         )
         new = (
             msgs.join(visited, ["sample", "id"], "left_anti")
@@ -200,9 +206,8 @@ def _scaffold(graph, seed: int):
     sample_ecc = _exact_ecc_of(pair1)
 
     wtab = _furthest_from_samples(pos, pair1).localCheckpoint(eager=True)
-    # >= 1 component with size > 2 ⇒ >= 1 w source
-    wlevels, rw, wst = _combined_bfs(graph, wtab, 1)
-    wlevels = wlevels.localCheckpoint(eager=True)
+    wst, _, rw = _level_bfs(graph, _source_levels(graph, wtab), wtab.count())
+    wlevels = wst.df.filter(F.col("level").isNotNull()).localCheckpoint(eager=True)
     wst.df.unpersist()  # wlevels is materialized; the BFS state is dead
     w_ecc = (
         wlevels.join(pos.select("id", "component"), "id")
@@ -239,22 +244,24 @@ def _w_sec(graph, wlevels: DataFrame, ngh: DataFrame) -> DataFrame:
     reference CAS race; pinned as the MIN over parents of the parent's
     EFFECTIVE value — its own Ngh index if it is in Ngh, else its
     propagated value).  Returns (id, sec)."""
-    maxlvl = wlevels.agg(F.max("level")).first()[0] or 0
+    # every w-BFS vertex gets a value, so the level-l frontier is the
+    # whole of level l: one collect sizes every superstep's frontier
+    level_sizes = dict(wlevels.groupBy("level").count().collect())
     cur = (
         ngh.filter(F.col("level") == 0)
         .select("id", F.col("ngh_idx").alias("eff"))
         .localCheckpoint(eager=True)
     )
     secs = []
-    for lvl in range(0, int(maxlvl)):
+    for lvl in range(0, max(level_sizes, default=0)):
         children = wlevels.filter(F.col("level") == lvl + 1).select("id")
         child_sec = (
-            cur.select(F.col("id").alias("src"), "eff")
-            .join(graph.edges, "src")
-            .select(F.col("dst").alias("id"), "eff")
+            edge_map(
+                graph, cur, message=F.col("eff"), aggregate=F.min,
+                frontier_size=level_sizes[lvl], extra_frontier_cols=("eff",),
+            )
             .join(children, "id")
-            .groupBy("id")
-            .agg(F.min("eff").alias("sec"))
+            .select("id", F.col("agg").alias("sec"))
             .localCheckpoint(eager=True)
         )
         secs.append(child_sec)

@@ -23,6 +23,9 @@ per-component iteration parity matches the reference's local counter.
 
 Per iteration: one candidate-selection window shuffle + the BFS's
 one-shuffle-per-level supersteps + one co-partitioned bounds join.
+The BFS is the shared level loop (``apps.bfs._level_bfs``); this
+module supplies its sources — the candidates — and their count, so a
+frontier of one vertex per component takes the sparse edge-map branch.
 """
 
 from __future__ import annotations
@@ -30,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..engine import IterState, edge_map, msgs_join_side
+from ..engine import IterState
+from .bfs import _level_bfs, _source_levels
 
 __all__ = ["ecc_tk"]
 
@@ -59,42 +63,6 @@ def _cc_positions(graph) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-
-
-def _combined_bfs(
-    graph, sources: DataFrame, n_sources: int
-) -> tuple[DataFrame, int, "IterState"]:
-    """Multi-source BFS, ONE source per component: ((id, level) for
-    reached vertices — per-component distances, shared column —
-    supersteps run = max per-component depth + 1, and the IterState
-    whose ``.df.unpersist()`` releases the cached BFS state once the
-    caller has materialized everything derived from the levels).
-    ``n_sources`` must be the true source count: 0 skips the loop
-    entirely (0 rounds, empty result) instead of running a wasted
-    superstep."""
-    init = graph.vertices.join(
-        sources.select("id", F.lit(0).alias("level")), "id", "left"
-    ).select("id", F.col("level").cast("int").alias("level"))
-    st = IterState(init, num_partitions=graph.num_partitions)
-    lvl, fsize = 0, n_sources
-    while fsize > 0:
-        frontier = st.df.filter(F.col("level") == lvl).select("id")
-        msgs = edge_map(
-            graph, frontier, message=F.lit(1), aggregate=F.min,
-        )
-        nxt = lvl + 1
-        new = st.df.join(msgs_join_side(msgs, fsize, graph.n), "id", "left").select(
-            "id",
-            F.when(
-                F.col("level").isNull() & F.col("agg").isNotNull(), F.lit(nxt)
-            )
-            .otherwise(F.col("level"))
-            .cast("int")
-            .alias("level"),
-        )
-        new, (fsize,) = st.advance(new, F.count_if(F.col("level") == nxt))
-        lvl = nxt
-    return st.df.filter(F.col("level").isNotNull()), lvl, st
 
 
 def ecc_tk(graph, on_superstep=None) -> tuple[DataFrame, int]:
@@ -146,8 +114,11 @@ def ecc_tk(graph, on_superstep=None) -> tuple[DataFrame, int]:
             .select("id", "component")
             .localCheckpoint(eager=True)
         )
-        # n_active > 0 guarantees at least one active component = one source
-        levels, _, bfs_st = _combined_bfs(graph, sources, 1)
+        # one source per active component (n_active > 0 ⇒ at least one)
+        bfs_st, _, _ = _level_bfs(
+            graph, _source_levels(graph, sources), sources.count()
+        )
+        levels = bfs_st.df.filter(F.col("level").isNotNull())
         # ecc of each component's candidate = max BFS level in it
         comp_ecc = (
             levels.join(st.df.select("id", "component"), "id")

@@ -19,16 +19,101 @@ Physical plan per superstep (exactly ONE shuffle):
       → new state + old rank column
     L1 = sum(abs(rank - old))          [computed by the state write's
                                         query: IterState.advance]
+
+``_power_iteration`` is that loop, shared: pagerank, pagerank_weighted
+and ``apps.trustrank`` each supply only their degree column, per-edge
+message and teleport term.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..engine import IterState, edge_map, msgs_join_side
 
 __all__ = ["pagerank", "pagerank_delta", "pagerank_weighted"]
+
+
+def _power_iteration(
+    graph,
+    fresh,
+    deg: str,
+    value: str,
+    message: Column,
+    teleport: Column,
+    *,
+    carry: tuple[str, ...] = (),
+    max_iters: int,
+    damping: float,
+    epsilon: float,
+    checkpoint_mgr,
+    checkpoint_every: int,
+    resume: bool,
+    name: str,
+    on_superstep,
+    edge_map_fn=edge_map,
+) -> tuple[DataFrame, int]:
+    """The ONE power-iteration loop (pagerank, pagerank_weighted,
+    trustrank): ``value ← damping · Σ message + teleport`` until the L1
+    change drops below ``epsilon`` or ``max_iters`` supersteps ran.
+
+    State (id, ``deg``, ``carry``..., ``value``) starts from
+    ``fresh()`` — or, with ``resume``, from the latest durable
+    checkpoint, which also holds the previous superstep's ``old``
+    column (so every superstep selects the named columns, never all).
+    Each superstep every vertex sends ``share = value / deg`` (NULL
+    for deg 0: its mass is lost, the reference's no-dangling quirk);
+    ``message`` is the per-edge Column over ``share`` (and ``weight``),
+    ``teleport`` the per-vertex constant term.  Returns ((id,
+    ``value``), supersteps run)."""
+    it = 0
+    if resume and checkpoint_mgr is not None and checkpoint_mgr.latest_step(name):
+        it = checkpoint_mgr.latest_step(name)
+        init_df = checkpoint_mgr.load(name, it, graph.num_partitions)
+    else:
+        init_df = fresh()
+    st = IterState(
+        init_df,
+        num_partitions=graph.num_partitions,
+        checkpoint_every=checkpoint_every,
+        manager=checkpoint_mgr,
+        name=name,
+        superstep=it,
+    )
+    keep = ("id", deg, *carry)
+    while it < max_iters:
+        it += 1
+        # dense superstep: every vertex is in the frontier every round
+        # (PageRank.C:86-98 never shrinks the frontier)
+        msgs = edge_map_fn(
+            graph,
+            st.df.select("id", F.try_divide(value, deg).alias("share")),
+            message=message,
+            aggregate=F.sum,
+            extra_frontier_cols=("share",),
+        )
+        new = (
+            st.df.select(*keep, F.col(value).alias("old"))
+            .join(msgs_join_side(msgs, None, graph.n), "id", "left")
+            .select(
+                *keep,
+                (F.lit(damping) * F.coalesce("agg", F.lit(0.0)) + teleport).alias(
+                    value
+                ),
+                "old",
+            )
+        )
+        new, (l1,) = st.advance(
+            new,
+            F.sum(F.abs(F.col(value) - F.col("old"))).alias("l1"),
+            metrics={"superstep": it},
+        )
+        if on_superstep:
+            on_superstep(it, {"l1": l1})
+        if l1 < epsilon:
+            break
+    return st.df.select("id", value), it
 
 
 def pagerank(
@@ -56,68 +141,28 @@ def pagerank(
     start — e.g. the previous scores of a slightly-grown graph —
     reconverges in a handful of supersteps instead of the cold-start
     depth (see ``streaming.incremental_pagerank``)."""
-    const = (1.0 - damping) / graph.n
-    it = 0
-    if resume and checkpoint_mgr is not None and checkpoint_mgr.latest_step(name):
-        it = checkpoint_mgr.latest_step(name)
-        init_df = checkpoint_mgr.load(name, it, graph.num_partitions)
-    elif init is not None:
-        init_df = (
-            graph.out_degrees.join(
-                init.select("id", F.col("rank").alias("_r")).hint("shuffle_hash"),
-                "id",
-                "left",
+
+    def fresh():
+        if init is None:
+            return graph.out_degrees.select(
+                "id", "outdeg", F.lit(1.0 / graph.n).alias("rank")
             )
-            .select(
-                "id", "outdeg",
-                F.coalesce("_r", F.lit(1.0 / graph.n)).alias("rank"),
-            )
+        return graph.out_degrees.join(
+            init.select("id", F.col("rank").alias("_r")).hint("shuffle_hash"),
+            "id",
+            "left",
+        ).select(
+            "id", "outdeg", F.coalesce("_r", F.lit(1.0 / graph.n)).alias("rank")
         )
-    else:
-        init_df = graph.out_degrees.select(
-            "id", "outdeg", F.lit(1.0 / graph.n).alias("rank")
-        )
-    st = IterState(
-        init_df,
-        num_partitions=graph.num_partitions,
-        checkpoint_every=checkpoint_every,
-        manager=checkpoint_mgr,
-        name=name,
-        superstep=it,
+
+    return _power_iteration(
+        graph, fresh, "outdeg", "rank", F.col("share"),
+        F.lit((1.0 - damping) / graph.n),
+        max_iters=max_iters, damping=damping, epsilon=epsilon,
+        checkpoint_mgr=checkpoint_mgr, checkpoint_every=checkpoint_every,
+        resume=resume, name=name, on_superstep=on_superstep,
+        edge_map_fn=edge_map_fn,
     )
-    while it < max_iters:
-        it += 1
-        # dense superstep: every vertex is in the frontier every round
-        # (PageRank.C:86-98 never shrinks the frontier)
-        msgs = edge_map_fn(
-            graph,
-            st.df.select("id", F.try_divide("rank", "outdeg").alias("share")),
-            message=F.col("share"),
-            aggregate=F.sum,
-            extra_frontier_cols=("share",),
-        )
-        new = (
-            st.df.select("id", "outdeg", F.col("rank").alias("old"))
-            .join(msgs_join_side(msgs, None, graph.n), "id", "left")
-            .select(
-                "id",
-                "outdeg",
-                (F.lit(damping) * F.coalesce("agg", F.lit(0.0)) + F.lit(const)).alias(
-                    "rank"
-                ),
-                "old",
-            )
-        )
-        new, (l1,) = st.advance(
-            new.select("id", "outdeg", "rank", "old"),
-            F.sum(F.abs(F.col("rank") - F.col("old"))).alias("l1"),
-            metrics={"superstep": it},
-        )
-        if on_superstep:
-            on_superstep(it, {"l1": l1})
-        if l1 < epsilon:
-            break
-    return st.df.select("id", "rank"), it
 
 
 def pagerank_weighted(
@@ -139,69 +184,31 @@ def pagerank_weighted(
     host-rank.  Self-loops participate like any edge (intra-host mass
     returns to the host).
 
-    Same superstep shape as :func:`pagerank` — one shuffle, share =
-    rank / Σ(outgoing weight) travels with the frontier, the per-edge
-    ``weight`` multiplies it inside the groupBy(dst) message — and the
-    same reference quirks: no dangling redistribution (wout = 0 loses
-    its mass), L1 stop, uniform 1/n start.  ``epsilon=0`` disables the
-    convergence test (exactly ``max_iters`` supersteps — what the
-    fixed-depth SQL oracle pins)."""
-    const = (1.0 - damping) / graph.n
-    it = 0
-    if resume and checkpoint_mgr is not None and checkpoint_mgr.latest_step(name):
-        it = checkpoint_mgr.latest_step(name)
-        init = checkpoint_mgr.load(name, it, graph.num_partitions)
-    else:
+    PageRank's loop with share = rank / Σ(outgoing weight) travelling
+    with the frontier and the per-edge ``weight`` multiplying it inside
+    the groupBy(dst) message — and the same reference quirks: no
+    dangling redistribution (wout = 0 loses its mass), L1 stop,
+    uniform 1/n start.  ``epsilon=0`` disables the convergence test
+    (exactly ``max_iters`` supersteps — what the fixed-depth SQL
+    oracle pins)."""
+
+    def fresh():
         wout = graph.edges.groupBy(F.col("src").alias("id")).agg(
             F.sum("weight").cast("double").alias("wout")
         )
-        init = (
-            graph.out_degrees.join(wout.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                F.coalesce("wout", F.lit(0.0)).alias("wout"),
-                F.lit(1.0 / graph.n).alias("rank"),
-            )
+        return graph.out_degrees.join(wout.hint("shuffle_hash"), "id", "left").select(
+            "id",
+            F.coalesce("wout", F.lit(0.0)).alias("wout"),
+            F.lit(1.0 / graph.n).alias("rank"),
         )
-    st = IterState(
-        init,
-        num_partitions=graph.num_partitions,
-        checkpoint_every=checkpoint_every,
-        manager=checkpoint_mgr,
-        name=name,
-        superstep=it,
+
+    return _power_iteration(
+        graph, fresh, "wout", "rank", F.col("share") * F.col("weight"),
+        F.lit((1.0 - damping) / graph.n),
+        max_iters=max_iters, damping=damping, epsilon=epsilon,
+        checkpoint_mgr=checkpoint_mgr, checkpoint_every=checkpoint_every,
+        resume=resume, name=name, on_superstep=on_superstep,
     )
-    while it < max_iters:
-        it += 1
-        msgs = edge_map(
-            graph,
-            st.df.select("id", F.try_divide("rank", "wout").alias("share")),
-            message=F.col("share") * F.col("weight"),
-            aggregate=F.sum,
-            extra_frontier_cols=("share",),
-        )
-        new = (
-            st.df.select("id", "wout", F.col("rank").alias("old"))
-            .join(msgs_join_side(msgs, None, graph.n), "id", "left")
-            .select(
-                "id",
-                "wout",
-                (
-                    F.lit(damping) * F.coalesce("agg", F.lit(0.0)) + F.lit(const)
-                ).alias("rank"),
-                "old",
-            )
-        )
-        new, (l1,) = st.advance(
-            new,
-            F.sum(F.abs(F.col("rank") - F.col("old"))).alias("l1"),
-            metrics={"superstep": it},
-        )
-        if on_superstep:
-            on_superstep(it, {"l1": l1})
-        if epsilon > 0 and l1 < epsilon:
-            break
-    return st.df.select("id", "rank"), it
 
 
 def pagerank_delta(

@@ -15,12 +15,15 @@ import struct
 
 import numpy as np
 
+from .codec_limits import check_pixels
+
 __all__ = ["decode_bmp", "encode_bmp", "encode_bmp_rle8"]
 
 
 def _decode_rle(data: bytes, w: int, h: int, four_bit: bool) -> np.ndarray:
     """RLE8/RLE4 stream → (h, w) uint8 index plane in FILE row order
     (row 0 = bottom row for the usual bottom-up bitmaps)."""
+    check_pixels(w, h, "BMP RLE")
     out = np.zeros((h, w), dtype=np.uint8)
     x = y = 0
     i = 0

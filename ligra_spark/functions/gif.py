@@ -30,6 +30,8 @@ import struct
 
 import numpy as np
 
+from .codec_limits import check_pixels
+
 __all__ = ["decode_gif", "decode_gif_frames", "encode_gif"]
 
 
@@ -123,6 +125,7 @@ def decode_gif_frames(buf: bytes):
     if buf[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     w, h = struct.unpack("<HH", buf[6:10])
+    check_pixels(w, h, "GIF")
     flags = buf[10]
     bg_index = buf[11]
     pos = 13
@@ -152,6 +155,7 @@ def decode_gif_frames(buf: bytes):
         if b != 0x2C:  # image descriptor expected
             raise ValueError(f"unexpected GIF block 0x{b:02x}")
         ix, iy, iw, ih = struct.unpack("<HHHH", buf[pos : pos + 8])
+        check_pixels(iw, ih, "GIF")
         iflags = buf[pos + 8]
         pos += 9
         lct = None

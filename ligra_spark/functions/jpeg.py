@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .codec_limits import check_pixels
 from .prefix_code import canonical_code, decode_symbol
 
 __all__ = ["decode_jpeg", "encode_jpeg_baseline", "encode_jpeg_progressive"]
@@ -224,6 +225,7 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
             progressive = marker == 0xC2
             h = int.from_bytes(body[1:3], "big")
             w = int.from_bytes(body[3:5], "big")
+            check_pixels(w, h, "JPEG")
             comps = []
             for c in range(body[5]):
                 cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]

@@ -30,6 +30,8 @@ import zlib
 
 import numpy as np
 
+from .codec_limits import check_pixels
+
 __all__ = ["decode_png", "encode_png"]
 
 _SIG = b"\x89PNG\r\n\x1a\n"
@@ -62,6 +64,7 @@ def decode_png(buf: bytes) -> np.ndarray:
     if ihdr is None:
         raise ValueError("PNG missing IHDR")
     w, h, depth, color, comp, filt, interlace = ihdr
+    check_pixels(w, h, "PNG")
     if depth not in (1, 2, 4, 8, 16):
         raise ValueError(f"bad PNG bit depth {depth}")
     if interlace not in (0, 1):

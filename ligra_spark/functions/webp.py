@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .codec_limits import check_pixels
 from .prefix_code import canonical_code, decode_symbol
 
 __all__ = ["decode_webp", "encode_webp_lossless"]
@@ -475,8 +476,7 @@ def decode_webp(buf: bytes) -> np.ndarray:
     br.read(1)  # alpha hint
     if br.read(3) != 0:
         raise ValueError("unsupported VP8L version")
-    if w * h > (1 << 26):
-        raise ValueError("VP8L image too large")
+    check_pixels(w, h, "VP8L")
     px, transforms = _decode_image_stream(br, w, h, True)
     px = _apply_inverse_transforms(px, transforms, h)
     if px.shape[0] != h or px.shape[1] < w:

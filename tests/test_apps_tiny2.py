@@ -2,6 +2,7 @@
 on the reference sample graph."""
 
 import numpy as np
+import pytest
 
 from ligra_spark import oracle
 
@@ -313,3 +314,81 @@ def test_community_lpa_matches_numpy(tiny_graph_sym, tiny_sym):
         lab = new
     got = community_lpa(tiny_graph_sym, rounds=5).toPandas().sort_values("id")
     np.testing.assert_array_equal(got["label"].to_numpy(), lab)
+
+
+def _trustrank_fixed(n, src, dst, seeds, iters, d=0.85):
+    """``iters`` supersteps of t = (1-d)v + d T't from t0 = v."""
+    deg = np.bincount(src, minlength=n).astype(float)
+    v = np.zeros(n)
+    v[seeds] = 1.0 / len(seeds)
+    t = v.copy()
+    for _ in range(iters):
+        t = d * np.bincount(dst, weights=t[src] / deg[src], minlength=n) + (1 - d) * v
+    return t
+
+
+@pytest.mark.parametrize("branch", ["dense", "sparse"])
+@pytest.mark.parametrize(
+    "app", ["radii", "ecc_fm", "ecc_loglog", "ecc_kbfs", "bfs_levels", "trustrank"]
+)
+def test_shared_loops_forced_branch_match_oracle(
+    app, branch, monkeypatch, tiny_graph, tiny_edges, tiny_graph_sym, tiny_sym
+):
+    """The shared superstep loops (kBFS wave, level BFS, power
+    iteration) under each engine branch: every frontier ⋈ edges join
+    forced dense with the state ⋈ msgs join hinted, or forced sparse
+    with it unhinted.  On the tiny graphs the engine's own rule always
+    picks sparse/unhinted, so the dense run is the only oracle check of
+    the dense plans.  Values equal the numpy oracle exactly (scores
+    within 1e-9), with the same round count."""
+    import importlib
+
+    from ligra_spark import apps, engine
+
+    sparse = branch == "sparse"
+    taken = set()
+    join = engine._frontier_join
+
+    def frontier_join(graph, frontier, cols, sparse_, in_edges=False):
+        taken.add(sparse_)
+        return join(graph, frontier, cols, sparse_, in_edges)
+
+    monkeypatch.setattr(engine, "_frontier_join", frontier_join)
+    monkeypatch.setattr(engine, "frontier_is_sparse", lambda size, m: sparse)
+    for loop in ("bfs", "ecc", "pagerank"):  # the shared loops' modules
+        monkeypatch.setattr(
+            importlib.import_module(f"ligra_spark.apps.{loop}"), "msgs_join_side",
+            (lambda msgs, size, n: msgs) if sparse
+            else (lambda msgs, size, n: msgs.hint("shuffle_hash")),
+        )
+
+    if app == "trustrank":
+        n, src, dst = tiny_edges
+        got_df, rounds = apps.trustrank(tiny_graph, [0, 3, 17], max_iters=12, epsilon=0)
+        got = np.array(_by_id(got_df, "trust", n))
+        np.testing.assert_allclose(
+            got, _trustrank_fixed(n, src, dst, [0, 3, 17], 12), atol=1e-9, rtol=0
+        )
+        assert rounds == 12
+    else:
+        if app == "radii":
+            (n, src, dst), g, col, fill = tiny_edges, tiny_graph, "radii", None
+            expected, want_rounds = oracle.radii(n, src, dst)
+            got_df, rounds = apps.radii(g)
+        elif app == "bfs_levels":
+            (n, src, dst), g, col, fill = tiny_edges, tiny_graph, "level", -1
+            expected = oracle.bfs_levels(n, src, dst, root=0)
+            want_rounds = expected.max()
+            got_df, rounds = apps.bfs_levels(g, root=0)
+        else:
+            (n, src, dst), g, col, fill = tiny_sym, tiny_graph_sym, "ecc", 0
+            expected, want_rounds = {
+                "ecc_fm": lambda: oracle.ecc_fm(n, src, dst, length=2, seed=0),
+                "ecc_loglog": lambda: oracle.ecc_loglog(n, src, dst, seed=0),
+                "ecc_kbfs": lambda: oracle.ecc_kbfs(n, src, dst, seed=5),
+            }[app]()
+            kwargs = {"ecc_fm": {"length": 2, "seed": 0}, "ecc_kbfs": {"seed": 5}}
+            got_df, rounds = getattr(apps, app)(g, **kwargs.get(app, {}))
+        np.testing.assert_array_equal(np.array(_by_id(got_df, col, n, fill)), expected)
+        assert rounds == want_rounds
+    assert taken == {sparse}

@@ -619,3 +619,61 @@ def test_tiff_through_image_features_and_sniffing(spark):
     r = image_features(media, fake=False).collect()[0]
     assert (r["height"], r["width"], r["channels"]) == (8, 8, 3)
     assert r["mean_r"] == pytest.approx(img.mean(), abs=0)
+
+
+def _huge_header(fmt: str) -> bytes:
+    """A few header bytes claiming a 65535×65535 image (VP8L: its 14-bit
+    maximum, 16384×16384), with no pixel data behind them."""
+    import zlib
+
+    if fmt == "jpeg":  # SOI + SOF0: 8-bit, 65535×65535, one component
+        sof = struct.pack(">HBHHB", 11, 8, 65535, 65535, 1) + b"\x01\x11\x00"
+        return b"\xff\xd8\xff\xc0" + sof
+    if fmt == "gif_screen":  # logical screen + 2-colour global table
+        return b"GIF89a" + struct.pack("<HH", 65535, 65535) + b"\x80\0\0" + bytes(6)
+    if fmt == "gif_image":  # 1×1 screen, then a 65535×65535 image descriptor
+        return (
+            b"GIF89a" + struct.pack("<HH", 1, 1) + b"\x80\0\0" + bytes(6)
+            + b"\x2c" + struct.pack("<HHHH", 0, 0, 65535, 65535)
+            + b"\x00\x02\x00\x3b"
+        )
+    if fmt == "png":  # IHDR (8-bit RGB) + empty IDAT + IEND
+        def chunk(kind, body):
+            crc = struct.pack(">I", zlib.crc32(kind + body))
+            return struct.pack(">I", len(body)) + kind + body + crc
+
+        ihdr = struct.pack(">IIBBBBB", 65535, 65535, 8, 2, 0, 0, 0)
+        return (
+            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"IDAT", b"")
+            + chunk(b"IEND", b"")
+        )
+    if fmt == "bmp_rle":  # BI_RLE8, bottom-up, 2-colour palette, end-of-bitmap
+        info = struct.pack("<IiiHHIIiiII", 40, 65535, 65535, 1, 8, 1, 0, 0, 0, 2, 0)
+        palette = bytes(8)
+        return b"BM" + struct.pack("<IHHI", 64, 0, 0, 62) + info + palette + b"\x00\x01"
+    assert fmt == "webp"  # VP8L: 14-bit (w-1), (h-1), alpha hint, version 0
+    bits = (16383 | 16383 << 14).to_bytes(4, "little")
+    vp8l = b"\x2f" + bits + bytes(4)
+    body = b"WEBP" + b"VP8L" + struct.pack("<I", len(vp8l)) + vp8l
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+@pytest.mark.parametrize(
+    "fmt", ["jpeg", "gif_screen", "gif_image", "png", "bmp_rle", "webp"]
+)
+def test_decoders_cap_decoded_size(fmt):
+    """Every image decoder checks the header's dimensions against the
+    one shared pixel cap before it allocates: a header claiming
+    65535×65535 raises ValueError instead of allocating gigabytes."""
+    from ligra_spark.functions.bmp import decode_bmp
+    from ligra_spark.functions.gif import decode_gif
+    from ligra_spark.functions.jpeg import decode_jpeg
+    from ligra_spark.functions.png import decode_png
+    from ligra_spark.functions.webp import decode_webp
+
+    decode = {
+        "jpeg": decode_jpeg, "gif_screen": decode_gif, "gif_image": decode_gif,
+        "png": decode_png, "bmp_rle": decode_bmp, "webp": decode_webp,
+    }[fmt]
+    with pytest.raises(ValueError, match="too large"):
+        decode(_huge_header(fmt))

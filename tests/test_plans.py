@@ -190,6 +190,30 @@ def test_edge_map_forced_branches_match_oracle(spark, tiny_edges, tiny_graph):
         assert got == want_multi, branch
 
 
+def test_level_bfs_from_sources_takes_sparse_branch(spark, tiny_graph, monkeypatch):
+    """The shared level BFS (``apps.bfs._level_bfs``) started from
+    several sources — one per component, as ecc_tk, ecc_rv/ecc_clrstv
+    and ecc_simple_approx start it — is given its true frontier size,
+    so on the tiny graph its first frontier ⋈ edges join broadcasts
+    the frontier instead of building the dense shuffled-hash join."""
+    from ligra_spark.apps import bfs
+
+    joins = []
+    edge_map = bfs.edge_map
+
+    def recording(*args, **kwargs):
+        joins.append(edge_map(*args, **kwargs))
+        return joins[-1]
+
+    monkeypatch.setattr(bfs, "edge_map", recording)
+    g = tiny_graph
+    sources = g.vertices.filter(F.col("id").isin(0, 5, 17)).select("id")
+    st, _, steps = bfs._level_bfs(g, bfs._source_levels(g, sources), 3)
+    st.df.unpersist()
+    assert steps == len(joins) > 1
+    assert "broadcast" in _first_join_left_hint(joins[0])
+
+
 @pytest.fixture(scope="module")
 def small_emb(spark):
     import numpy as np
